@@ -2895,6 +2895,50 @@ def test_source_minhash_drift_estimates(spark):
     assert len(out) == 6
 
 
+def test_grouped_rank_cumsum_null_and_nan_group_keys(spark):
+    """NULL group keys next to non-NULL ones: the per-(partition,
+    group) offsets must be ordered without comparing keys (a NULL and
+    a string do not order), and the NULL group's later partitions must
+    still receive their offsets. A NaN group spanning partitions is one
+    group, as in Spark."""
+    import math
+
+    from ukis_h3cellstore_spark.ops import robust as R
+
+    def group(g):
+        return "nan" if isinstance(g, float) and math.isnan(g) else g
+
+    cases = [
+        (keys, g_type, n)
+        for keys, g_type in (
+            (["a", None, "a", None, "b"], "string"),
+            ([1.0, math.nan, 1.0, None, math.nan], "double"),
+        )
+        for n in (5, 300)
+    ]
+    for keys, g_type, n in cases:
+        rows = [(i, keys[i % 5], float((i * 37) % 11)) for i in range(n)]
+        df = spark.createDataFrame(
+            rows, f"id long, g {g_type}, v double"
+        ).repartition(3)
+        ranked = {
+            r.id: r.rank
+            for r in R.grouped_rank(df, "g", ["v", "id"], num_partitions=6).collect()
+        }
+        cum = {
+            r.id: r.cum_sum
+            for r in R.grouped_cumsum(
+                df, "g", ["v", "id"], "v", num_partitions=6
+            ).collect()
+        }
+        for g in {group(k) for k in keys}:
+            items = sorted((v, i) for i, k, v in rows if group(k) == g)
+            acc = 0.0
+            for rk, (v, i) in enumerate(items, start=1):
+                acc += v
+                assert (ranked[i], cum[i]) == (rk, acc), (g_type, n, g, i)
+
+
 def test_grouped_rank_tie_run_splits_across_partitions(spark):
     """The trailing range_tiebreaker key must split a dominant EQUAL
     (group, value) tie-run across range partitions — range partitioning

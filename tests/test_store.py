@@ -528,3 +528,64 @@ def test_cross_insert_sum_merge_requires_summing_engine(spark, store):
     out4 = store.query_tableset_cells("xsum", [parent], 4).df.toPandas()
     assert len(out4) == 1
     assert int(out4.value_cents.iloc[0]) == 42 * len(kids6)
+
+
+#: Spark jobs the second, overlapping insert below may run (measured:
+#: 33 on 2, 4 and 8 cores with AQE on). It compacts once, runs one
+#: prelude aggregation, writes three split levels and two rollup
+#: levels, and rewrites five existing global tables.
+OVERLAPPING_INSERT_MAX_JOBS = 33
+
+
+def test_overlapping_insert_jobs_ceiling(spark, tmp_path):
+    """Job budget of an insert whose every table already exists in the
+    single-directory "global" layout — the common steady state of a
+    small-batch ingest. Counted through the status tracker under the
+    insert's own job group (the id ``cancel_insert`` keys on). Each
+    touched table still holds one parquet file afterwards."""
+    import glob
+
+    store = CellStore(spark, str(tmp_path / "wh_jobs"))
+    schema = (
+        CompactedTableSchemaBuilder("jobs_set")
+        .h3_base_resolutions([4, 6, 8])
+        .add_h3index_column()
+        .add_aggregated_column("cls", "UInt8", "SetNullOnConflict", nullable=True)
+        .build()
+    )
+
+    def cls(cell):
+        # uniform res-6 cells, res-7 cells of a second class inside
+        # mixed res-6 cells, and single odd res-8 cells
+        d6, d7, d8 = (h3c.get_digit(cell, r) for r in (6, 7, 8))
+        if d6 in (0, 1):
+            return d6
+        if d6 == 4 and d8 == 2:
+            return 7
+        return 5 if d7 == 3 else d6
+
+    def batch(*res5):
+        cells = [c for p in res5 for c in h3c.cell_to_children(p, 8)]
+        return spark.createDataFrame(
+            [(c, cls(c)) for c in cells], "h3index long, cls int"
+        )
+
+    a, b, c = (h3c.build_cell(20, [1, 2, 3, 4, d]) for d in (0, 1, 2))
+    store.insert_h3dataframe_into_tableset(schema, batch(a, b))
+    df = batch(b, c)  # b overlaps the first insert
+    store.insert_h3dataframe_into_tableset(schema, df)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(f"h3cs-insert-jobs_set-{id(df)}")
+    assert 0 < len(jobs) <= OVERLAPPING_INSERT_MAX_JOBS, len(jobs)
+
+    tables = [
+        m for m in schema.resolution_metadata()
+        if glob.glob(store._table_path("jobs_set", m))
+    ]
+    assert len(tables) == 5
+    for m in tables:
+        files = glob.glob(store._table_path("jobs_set", m) + "/h3part=0/*.parquet")
+        assert len(files) == 1, (m, files)
+    out = store.query_tableset_cells("jobs_set", [a, b, c], 8).df.collect()
+    assert sorted((r.h3index, r.cls) for r in out) == sorted(
+        (x, cls(x)) for p in (a, b, c) for x in h3c.cell_to_children(p, 8)
+    )

@@ -52,7 +52,7 @@ def _git_state(root: str) -> tuple[str, bool]:
         # the tree; anything else (tracked changes, untracked .py)
         # does
         dirty = any(
-            not (line.startswith("??") and "plans/" in line)
+            not line.startswith("?? plans/")
             for line in status
             if line.strip()
         )
@@ -74,6 +74,11 @@ def main() -> None:
 
     argv = [a for a in sys.argv[1:] if a != "--allow-dirty"]
     allow_dirty = "--allow-dirty" in sys.argv
+    if not argv:
+        sys.exit(
+            "usage: python tools/plan_dump.py <tag> [sf_dir] [query ...] "
+            "[--allow-dirty]"
+        )
     tag = argv[0]
     sf_dir = argv[1] if len(argv) > 1 else "/root/testdata/sf0.01"
     names = argv[2:]

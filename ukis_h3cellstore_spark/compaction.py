@@ -8,13 +8,16 @@ that stores uniform regions once.
 
 Spark-first design (scale notes):
 
-- ``compact_df`` is pure JVM DataFrame algebra — an iterative
-  finest-to-coarsest loop of ``groupBy(parent, *value_cols)`` where a
-  parent is promoted when all its children are present (7, or 6 for a
-  pentagon parent). No Python UDF; every level is one partial-agg
-  (map-side combine) shuffle over a geometrically shrinking row set.
-  Each level's survivors are accumulated lazily; intermediates are
-  persisted to keep the plan linear instead of exponential.
+- ``compact_df`` runs ONE ``applyInPandas`` pass grouped by the
+  res-``max_res - GROUP_LEVELS`` ancestor (a group holds at most 7^6
+  cells, whatever the total size). Inside a group every level is
+  vectorized numpy: parent bit arithmetic, then one sort-based count
+  per level over (parent, value code). Rows that compact all the way
+  to the group resolution, and input rows already at it or coarser,
+  go through a JVM window loop (one shuffle per level); that loop
+  runs only when such rows exist, which a single-resolution batch
+  holding no whole uniform res-``max_res - GROUP_LEVELS`` cell never
+  has.
 - ``uncompact_df`` expands mixed-resolution rows to a target
   resolution with **staged broadcast joins against small child-offset
   tables** (``h3_expand_to_children``: each stage's offsets frame is at
@@ -27,8 +30,10 @@ Spark-first design (scale notes):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ukis_h3cellstore_spark import query as build_query
 from ukis_h3cellstore_spark.h3 import cells as h3c
@@ -41,6 +46,8 @@ from ukis_h3cellstore_spark.h3 import expressions as hx
 #: run the JVM loop over the residue (≤ 1/7^6 of the rows).
 GROUP_LEVELS = 6
 
+_PENTAGON_BASE_CELLS = np.array(sorted(h3c.PENTAGON_BASE_CELLS), dtype=np.int64)
+
 
 def compact_df(
     df: DataFrame,
@@ -52,21 +59,28 @@ def compact_df(
 
     ``df`` may hold mixed resolutions. Attribute columns (everything
     except the h3 column) take part in the grouping: only siblings with
-    equal attribute values merge, so the operation is lossless
+    equal attribute values merge (NULL and NaN are values of their
+    own, as in a Spark ``groupBy``), so the operation is lossless
     (``uncompact_df(compact_df(df), r)`` reproduces ``df`` for
     single-resolution input).
 
     Two phases:
 
-    1. all levels finer than ``P = max_res - GROUP_LEVELS`` compact in
-       ONE ``applyInPandas`` pass grouped by the res-P ancestor: every
-       complete sibling set below P lies entirely inside one group
-       (siblings share their res-P ancestor), so per-group exact
-       compaction via the pure-Python core is correct, and sibling
-       sets AT res P span different groups, so no over-promotion.
-       One shuffle replaces a window-agg per level.
-    2. the residue at res ≤ P (≤ 1/7^GROUP_LEVELS of the input) runs
-       the JVM window loop for the remaining coarse levels.
+    1. ONE ``applyInPandas`` pass compacts every level finer than
+       ``P = max_res - GROUP_LEVELS``. A row finer than P is grouped by
+       its res-P ancestor: every complete sibling set below P lies
+       entirely inside one group (siblings share their res-P
+       ancestor), so per-group exact compaction is correct, and sibling
+       sets AT res P span different groups, so no over-promotion. A row
+       at res ≤ P is grouped by its own cell (it only deduplicates).
+    2. the rows at res ≤ P after the pass (≤ 1/7^GROUP_LEVELS of the
+       input) run the JVM window loop for the remaining coarse levels.
+
+    With ``persist`` (the default) the pass is computed once into a
+    local checkpoint, and phase 2 runs only when a row lies at or
+    below P: two jobs for the pass plus one emptiness check over the
+    checkpoint. Without it everything stays lazy and each consumer of
+    the result re-runs the pass.
     """
     value_cols = [c for c in df.columns if c != h3index_column]
     h3col = F.col(h3index_column)
@@ -76,70 +90,148 @@ def compact_df(
         row = df.select(F.max(res_col).alias("r")).first()
         max_res = row["r"] if row and row["r"] is not None else 0
 
-    group_res = max(max_res - GROUP_LEVELS, 0)
-    if group_res == 0 and max_res <= GROUP_LEVELS:
+    if max_res <= GROUP_LEVELS:
         # the whole hierarchy fits into basecell groups → pure pandas
         # pass, no JVM tail (sibling sets never span base cells)
         return _compact_grouped_pandas(
-            df, h3index_column, value_cols, group_key_res=None
+            df, h3index_column, value_cols, hx.h3_get_base_cell(h3col)
         )
 
-    fine = df.filter(res_col > group_res)
-    coarse = df.filter(res_col <= group_res)
-    fine_done = _compact_grouped_pandas(
-        df=fine,
-        h3index_column=h3index_column,
-        value_cols=value_cols,
-        group_key_res=group_res,
+    group_res = max_res - GROUP_LEVELS
+    done = _compact_grouped_pandas(
+        df,
+        h3index_column,
+        value_cols,
+        F.when(res_col > group_res, hx.h3_to_parent(h3col, group_res)).otherwise(
+            h3col
+        ),
     )
-    # rows that compacted all the way down to res P join the JVM tail;
-    # rows still finer than P are final (their promotion failed inside
-    # their own group and can never succeed elsewhere)
-    fr = hx.h3_get_resolution(F.col(h3index_column))
-    tail_in = coarse.unionByName(fine_done.filter(fr == group_res))
-    still_fine = fine_done.filter(fr > group_res)
+    if persist:
+        # the emptiness check, the tail and the final union all read
+        # the pass; without this each of them re-runs it
+        done = done.localCheckpoint(eager=True)
+    # rows at res ≤ P go on to the JVM tail; rows still finer than P
+    # are final (their promotion failed inside their own group and can
+    # never succeed elsewhere)
+    tail_in = done.filter(res_col <= group_res)
+    if persist and tail_in.isEmpty():
+        return done
     tail_out = _compact_levels_jvm(
         tail_in, h3index_column, value_cols, group_res, persist
     )
-    return tail_out.unionByName(still_fine)
+    return tail_out.unionByName(done.filter(res_col > group_res))
+
+
+def _unique_pairs(a: np.ndarray, b: np.ndarray):
+    """Distinct ``(a, b)`` pairs of two int64 arrays: returns the pair
+    columns, each input row's pair id and each pair's row count."""
+    order = np.lexsort((b, a))
+    a_s, b_s = a[order], b[order]
+    new = np.ones(len(a), dtype=bool)
+    new[1:] = (a_s[1:] != a_s[:-1]) | (b_s[1:] != b_s[:-1])
+    starts = np.flatnonzero(new)
+    inverse = np.empty(len(a), dtype=np.int64)
+    inverse[order] = np.cumsum(new) - 1
+    counts = np.diff(np.append(starts, len(a)))
+    return a_s[starts], b_s[starts], inverse, counts
+
+
+def _compact_codes_np(cells: np.ndarray, codes: np.ndarray):
+    """``h3c.compact_cells`` applied separately to the cells of each
+    value code, vectorized: returns the compacted ``(cell, code)``
+    pairs. Per level, finest first: distinct (cell, code) pairs, their
+    parents, one count per (parent, code); a parent with all its
+    children (7, or 6 for a pentagon) replaces them on the next
+    level."""
+    out_cells, out_codes = [], []
+    res = (cells >> 52) & 0xF
+    top = int(res.max()) if len(res) else 0
+    for r in range(top, 0, -1):
+        at = res == r
+        if not at.any():
+            continue
+        c, k, _, _ = _unique_pairs(cells[at], codes[at])
+        pr = r - 1
+        fill = h3c.trailing_sevens(pr)
+        parent = (c & np.int64(~h3c._RES_MASK)) | np.int64((pr << 52) | fill)
+        pp, pk, inverse, counts = _unique_pairs(parent, k)
+        pentagon = np.isin((pp >> 45) & 0x7F, _PENTAGON_BASE_CELLS) & (
+            (pp & np.int64(h3c._DIGIT_AREA_MASK)) == fill
+        )
+        complete = counts == np.where(pentagon, 6, 7)
+        kept = ~complete[inverse]
+        out_cells.append(c[kept])
+        out_codes.append(k[kept])
+        rest = ~at
+        cells = np.concatenate([cells[rest], pp[complete]])
+        codes = np.concatenate([codes[rest], pk[complete]])
+        res = np.concatenate(
+            [res[rest], np.full(int(complete.sum()), pr, dtype=res.dtype)]
+        )
+    # what is left is at res 0: distinct pairs, nothing to promote to
+    c, k, _, _ = _unique_pairs(cells, codes)
+    out_cells.append(c)
+    out_codes.append(k)
+    return np.concatenate(out_cells), np.concatenate(out_codes)
 
 
 def _compact_grouped_pandas(
     df: DataFrame,
     h3index_column: str,
     value_cols: list[str],
-    group_key_res: int | None,
+    key: Column,
 ) -> DataFrame:
-    """One-shuffle exact compaction within res-``group_key_res``
-    ancestor groups (basecell groups when None)."""
-    if group_key_res is None:
-        key = hx.h3_get_base_cell(F.col(h3index_column))
-    else:
-        key = hx.h3_to_parent_dyn(
-            F.col(h3index_column), F.lit(group_key_res)
-        )
-    schema = df.schema
+    """One-shuffle exact compaction within the groups of ``key`` (a
+    cell's ancestor: no sibling set may span two groups).
+
+    Arrow turns a float NaN into NULL on the way back from pandas, and
+    pandas groups NaN with NULL; a boolean ``isnan`` flag per float
+    column travels with the row, keeps the two apart in the grouping
+    and restores the NaN afterwards."""
+    nan_flags = {
+        c: f"__nan_{i}"
+        for i, c in enumerate(value_cols)
+        if isinstance(df.schema[c].dataType, (T.FloatType, T.DoubleType))
+    }
+    src = df.withColumns(
+        {flag: F.isnan(F.col(c)) for c, flag in nan_flags.items()}
+    )
+    schema = src.schema
+    group_cols = value_cols + list(nan_flags.values())
 
     def compact_group(pdf):
-        import pandas as pd
-
         pdf = pdf.drop(columns=["__grp"])
-        if not value_cols:
-            cells = h3c.compact_cells(pdf[h3index_column].tolist())
-            return pd.DataFrame({h3index_column: cells}, dtype="int64")
-        out_parts = []
-        for _, sub in pdf.groupby(value_cols, dropna=False, sort=False):
-            cells = h3c.compact_cells(sub[h3index_column].tolist())
-            rep = sub.iloc[[0]].drop(columns=[h3index_column])
-            block = rep.loc[rep.index.repeat(len(cells))].reset_index(drop=True)
-            block.insert(0, h3index_column, pd.Series(cells, dtype="int64"))
-            out_parts.append(block[list(pdf.columns)])
-        return pd.concat(out_parts, ignore_index=True)
+        cells = pdf[h3index_column].to_numpy(dtype=np.int64)
+        if group_cols:
+            codes = (
+                pdf.groupby(group_cols, dropna=False, sort=False)
+                .ngroup()
+                .to_numpy(dtype=np.int64)
+            )
+        else:
+            codes = np.zeros(len(cells), dtype=np.int64)
+        out_cells, out_codes = _compact_codes_np(cells, codes)
+        # every row of a code carries the same values: take the first
+        _, first = np.unique(codes, return_index=True)
+        out = pdf.iloc[first[out_codes]].reset_index(drop=True)
+        out[h3index_column] = out_cells
+        return out
 
-    return (
-        df.withColumn("__grp", key)
+    out = (
+        src.withColumn("__grp", key)
         .groupBy("__grp")
         .applyInPandas(compact_group, schema)
+    )
+    if not nan_flags:
+        return out
+    nan = {c: F.lit(float("nan")).cast(df.schema[c].dataType) for c in nan_flags}
+    return out.select(
+        *[
+            F.when(F.col(nan_flags[c]), nan[c]).otherwise(F.col(c)).alias(c)
+            if c in nan_flags
+            else F.col(c)
+            for c in df.columns
+        ]
     )
 
 
@@ -156,12 +248,11 @@ def _compact_levels_jvm(
     from pyspark.sql import Window
 
     out_levels: list[DataFrame] = []
-    # duplicate (cell, values) rows must collapse before the
-    # completeness count: the window counts ROWS, so duplicates could
-    # fake a full sibling set (or, lacking a digit-0 duplicate, drop a
-    # genuinely complete group). The pandas phase dedups implicitly
-    # (compact_cells works on a set); this keeps both phases agreeing.
-    cur = df.dropDuplicates([h3index_column, *value_cols])
+    # duplicate (cell, values) rows — in the input, or a promoted
+    # parent that was also an input row — must not fake a full sibling
+    # set: the window counts DISTINCT children, and one dedup at the
+    # end collapses the copies, as the pandas phase does per level.
+    cur = df
     for r in range(max_res, 0, -1):
         at_r = cur.filter(hx.h3_get_resolution(F.col(h3index_column)) == r)
         rest = cur.filter(hx.h3_get_resolution(F.col(h3index_column)) != r)
@@ -172,14 +263,17 @@ def _compact_levels_jvm(
             "__h3_parent", hx.h3_to_parent(F.col(h3index_column), r - 1)
         )
         w = Window.partitionBy("__h3_parent", *value_cols)
-        counted = with_parent.withColumn("__n", F.count(F.lit(1)).over(w))
+        counted = with_parent.withColumn(
+            "__n", F.size(F.collect_set(h3index_column).over(w))
+        )
         if persist:
             # one lazy checkpoint per level: truncates lineage (the
             # loop would otherwise build a 2^levels plan via rest ∪
             # promoted) and shares the window shuffle between the
-            # promoted and kept branches — eager=False so the whole
-            # chain materializes in ONE job at the first action instead
-            # of launching a job per level
+            # promoted and kept branches. "Lazy" is only half true:
+            # with AQE on, the call itself runs one job per level (the
+            # adaptive plan materializes to hand over its RDD); with
+            # AQE off it runs none.
             counted = counted.localCheckpoint(eager=False)
         need = F.when(
             hx.h3_is_pentagon(F.col("__h3_parent")), F.lit(6)
@@ -202,7 +296,7 @@ def _compact_levels_jvm(
     result = cur
     for lvl in out_levels:
         result = result.unionByName(lvl)
-    return result
+    return result.dropDuplicates()
 
 
 def uncompact_df(

@@ -136,6 +136,21 @@ def range_tiebreaker(df: DataFrame, range_tiebreak=None) -> Column:
     return F.xxhash64(*cols)
 
 
+def _blocks_by_group(rows: list, group_col: str) -> list:
+    """The per-(partition, group) rows of an offsets collect as
+    ``(group, rows)`` pairs, each group's rows in partition-id order.
+    Group keys are never compared (a NULL key next to a string one
+    does not order), and every NaN key lands in one group, as in a
+    Spark ``groupBy``."""
+    nan_key = object()
+    groups: dict = {}
+    for r in sorted(rows, key=lambda r: int(r["__pid"])):
+        g = r[group_col]
+        key = nan_key if isinstance(g, float) and g != g else g
+        groups.setdefault(key, (g, []))[1].append(r)
+    return list(groups.values())
+
+
 def grouped_rank(
     df: DataFrame,
     group_col: str,
@@ -191,17 +206,12 @@ def grouped_rank(
     # exclusive prefix over pids within each group -> rank offsets,
     # folded with the block-start id into ONE long per (pid, group):
     # rank = __base + __mid  where  __base = offset − m0 + 1
-    by_group: dict = {}
-    for r in sorted(counts, key=lambda r: (r[group_col], int(r["__pid"]))):
-        by_group.setdefault(r[group_col], []).append(
-            (int(r["__pid"]), int(r["__n"]), int(r["__m0"]))
-        )
     offsets = []
-    for g, lst in by_group.items():
+    for g, blocks in _blocks_by_group(counts, group_col):
         acc = 0
-        for pid, n, m0 in lst:
-            offsets.append((pid, g, acc - m0 + 1))
-            acc += n
+        for r in blocks:
+            offsets.append((int(r["__pid"]), g, acc - int(r["__m0"]) + 1))
+            acc += int(r["__n"])
     spark = df.sparkSession
     g_type = dict(df.dtypes)[group_col]
     schema = f"__pid int, {group_col} {g_type}, __base long"
@@ -361,25 +371,26 @@ def grouped_cumsum(
             f"grouped_cumsum: unsupported sum type {sum_type!r}"
         )
     counts = totals_df.collect()
-    by_group: dict = {}
-    for r in sorted(counts, key=lambda r: (r[group_col], int(r["__pid"]))):
-        by_group.setdefault(r[group_col], []).append(
-            (int(r["__pid"]), r["__total"])
-        )
     offsets = []
-    for g, lst in by_group.items():
+    for g, blocks in _blocks_by_group(counts, group_col):
         acc = cast(0)
-        for pid, tot in lst:
-            offsets.append((pid, g, acc))
-            acc += cast(tot or 0)
+        for r in blocks:
+            offsets.append((int(r["__pid"]), g, acc))
+            acc += cast(r["__total"] or 0)
     spark = df.sparkSession
     g_type = dict(df.dtypes)[group_col]
     off_df = spark.createDataFrame(
         offsets, f"__pid int, {group_col} {g_type}, __offset {sum_type}"
     )
     zero = F.lit(0).cast(sum_type)
+    # null-safe on the group key, so a NULL group's later partitions
+    # get their offsets too
+    cond = within["__pid"] == off_df["__pid"]
+    cond = cond & within[group_col].eqNullSafe(off_df[group_col])
     return (
-        within.join(F.broadcast(off_df), on=["__pid", group_col], how="left")
+        within.join(F.broadcast(off_df), cond, how="left")
+        .drop(off_df["__pid"])
+        .drop(off_df[group_col])
         .withColumn(
             out_col, F.coalesce(F.col("__offset"), zero) + F.col("__within")
         )

@@ -310,6 +310,25 @@ class CellStore:
         )
         return bound if bound < default else None
 
+    def _clustered(
+        self,
+        schema: CompactedTableSchema,
+        df: DataFrame,
+        width: int | None,
+        merge: bool,
+    ) -> DataFrame:
+        """``df`` hash-partitioned on the partition columns (``width``
+        tasks, or the session default when None), optionally engine-
+        merged, then sorted by the sort key within each task. The merge
+        runs AFTER the repartition: its grouping keys include the
+        partition columns, so every group already sits in one task and
+        Spark plans no second exchange for it."""
+        cols = [F.col(c) for c in self._partition_columns(schema)]
+        out = df.repartition(width, *cols) if width else df.repartition(*cols)
+        if merge:
+            out = self._apply_engine_merge(schema, out)
+        return out.sortWithinPartitions(*schema.sort_key())
+
     def _write_table(
         self,
         schema: CompactedTableSchema,
@@ -317,23 +336,20 @@ class CellStore:
         df: DataFrame,
         options: InsertOptions,
         batch_rows: int | None = None,
+        merge: bool = False,
     ) -> None:
-        part_cols = self._partition_columns(schema)
-        sort_cols = schema.sort_key()
+        """Append ``df`` to one pyramid table; ``merge`` applies the
+        table engine's merge to the batch itself on the way."""
         mode = self._table_mode(schema, meta, batch_rows)
         out = self._with_partition_columns(schema, df, meta.resolution, mode)
         self._record_table_mode(schema, meta, mode)
-        width = self._write_width(schema, meta, mode)
-        rep = (
-            out.repartition(width, *[F.col(c) for c in part_cols])
-            if width
-            else out.repartition(*[F.col(c) for c in part_cols])
-        )
         (
-            rep.sortWithinPartitions(*sort_cols)
+            self._clustered(
+                schema, out, self._write_width(schema, meta, mode), merge
+            )
             .write.mode("append")
             .option("maxRecordsPerFile", options.max_num_rows_per_chunk)
-            .partitionBy(*part_cols)
+            .partitionBy(*self._partition_columns(schema))
             .parquet(self._table_path(schema.name, meta))
         )
 
@@ -411,12 +427,18 @@ class CellStore:
         res_col = hx.h3_get_resolution(F.col(h3name))
         df = df.withColumn("__res", res_col).persist()
         try:
-            found = [r["__res"] for r in df.select("__res").distinct().collect()]
+            # one job gives the levels present AND the batch volume,
+            # which steers the adaptive physical layout
+            level_rows = {
+                r["__res"]: r["count"]
+                for r in df.groupBy("__res").count().collect()
+            }
+            found = sorted(level_rows)
             if not found:
                 return
-            # batch volume steers the adaptive physical layout (cheap:
-            # the frame is already persisted by the distinct() above)
-            batch_rows = df.count() if self.auto_partitioning else None
+            batch_rows = (
+                sum(level_rows.values()) if self.auto_partitioning else None
+            )
             max_res = schema.max_h3_resolution
             if max(found) > max_res:
                 raise SchemaError(
@@ -451,7 +473,9 @@ class CellStore:
 
             group = self._insert_job_group
 
-            def _write(meta: ResolutionMetadata, level_df: DataFrame) -> None:
+            def _write(
+                meta: ResolutionMetadata, level_df: DataFrame, merge: bool
+            ) -> None:
                 # the description names the pyramid level so the UI /
                 # status REST API can attribute shuffle bytes per level
                 # (tools/scale_smoke.py --rollup-bytes); the GROUP id —
@@ -463,7 +487,9 @@ class CellStore:
                     f"{'c' if meta.is_compacted else 'b'}]",
                     interruptOnCancel=True,
                 )
-                self._write_table(schema, meta, level_df, options, batch_rows)
+                self._write_table(
+                    schema, meta, level_df, options, batch_rows, merge=merge
+                )
 
             written_frames: dict[ResolutionMetadata, DataFrame] = {}
             with ThreadPoolExecutor(max_workers=3) as pool:
@@ -471,13 +497,9 @@ class CellStore:
                 for meta, level_df in level_dfs.items():
                     # in-flight engine merge of the batch itself (the
                     # reference relies on the MergeTree engine +
-                    # OPTIMIZE; one extra map-side-combine shuffle here
+                    # OPTIMIZE; merging inside the write's own shuffle
                     # replaces a read-back rewrite for fresh tables)
-                    futures.append(
-                        pool.submit(
-                            _write, meta, self._apply_engine_merge(schema, level_df)
-                        )
-                    )
+                    futures.append(pool.submit(_write, meta, level_df, True))
                     written.append(meta)
                     written_frames[meta] = level_df
 
@@ -509,7 +531,7 @@ class CellStore:
                     level = level.persist()
                     persisted.append(level)
                     meta = ResolutionMetadata(target_res, False)
-                    futures.append(pool.submit(_write, meta, level))
+                    futures.append(pool.submit(_write, meta, level, False))
                     written.append(meta)
                     written_frames[meta] = level
                     current = level
@@ -530,6 +552,8 @@ class CellStore:
                 touched_vals: dict[ResolutionMetadata, list] = {}
                 for m in touched_existing:
                     mode = self._table_mode(schema, m)
+                    if mode == "global":
+                        continue  # one partition: whole-table rewrite
                     pdf = self._with_partition_columns(
                         schema, written_frames[m], m.resolution, mode
                     )
@@ -929,7 +953,10 @@ class CellStore:
         partition-scoped ``OPTIMIZE ... PARTITION`` (O11). Correct
         because partition values derive from the row itself, so
         duplicates can never span partitions. Without it the whole
-        table rewrites (the public API's behavior)."""
+        table rewrites (the public API's behavior), and so does a
+        "global"-mode table, whose one partition IS the whole table:
+        read, merge into a temp directory, swap — one exchange, one
+        write, no materialization."""
         schema = self.get_schema(name)
         metas = metas or [
             m
@@ -945,10 +972,10 @@ class CellStore:
             touched = (
                 touched_partitions.get(meta) if touched_partitions else None
             )
+            if touched is not None and not touched:
+                continue
             mode = self._table_mode(schema, meta)  # preserve layout marker
-            if touched is not None:
-                if not touched:
-                    continue
+            if touched is not None and mode != "global":
                 cond = None
                 for row in touched:
                     clause = None
@@ -956,21 +983,15 @@ class CellStore:
                         eq = F.col(c) == F.lit(row[c])
                         clause = eq if clause is None else clause & eq
                     cond = clause if cond is None else cond | clause
-                scoped = df.filter(cond)
-                deduped = self._apply_engine_merge(schema, scoped)
                 # materialize before overwriting the path being read
                 # (breaks the logical read-write cycle; dynamic
                 # overwrite then replaces ONLY the touched partitions).
                 # Width = touched-value count: a hash repartition on
                 # the partition columns cannot occupy more tasks than
                 # distinct value combinations.
-                deduped = (
-                    deduped.repartition(
-                        max(len(touched), 1), *[F.col(c) for c in part_cols]
-                    )
-                    .sortWithinPartitions(*schema.sort_key())
-                    .localCheckpoint(eager=True)
-                )
+                deduped = self._clustered(
+                    schema, df.filter(cond), max(len(touched), 1), merge=True
+                ).localCheckpoint(eager=True)
                 (
                     deduped.write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
@@ -979,16 +1000,11 @@ class CellStore:
                 )
                 deduped.unpersist()
             else:
-                deduped = self._apply_engine_merge(schema, df)
                 tmp = path + "__dedup_tmp"
-                width = self._write_width(schema, meta, mode)
-                rep = (
-                    deduped.repartition(width, *[F.col(c) for c in part_cols])
-                    if width
-                    else deduped.repartition(*[F.col(c) for c in part_cols])
-                )
                 (
-                    rep.sortWithinPartitions(*schema.sort_key())
+                    self._clustered(
+                        schema, df, self._write_width(schema, meta, mode), merge=True
+                    )
                     .write.mode("overwrite")
                     .partitionBy(*part_cols)
                     .parquet(tmp)
