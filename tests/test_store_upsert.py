@@ -106,7 +106,7 @@ def test_upsert_multibatch_equals_onebatch(spark, tmp_path, auto_part):
     """Keep-max-version + tombstones + coarse refresh; final pyramid
     must be identical whether changes arrive in one batch or three.
     auto_part=False forces the schema-declared partition layout so the
-    scoped (dynamic-overwrite) refresh path runs; True exercises the
+    scoped (staged partition rewrite) refresh path runs; True exercises the
     global-mode full-recompute path."""
     a, b, c, d = CELLS[0], CELLS[1], CELLS[2], CELLS[3]
     batches = [
@@ -158,8 +158,8 @@ def test_upsert_out_of_order_replay_is_idempotent(spark, tmp_path):
 
 def test_tombstone_only_partition_is_cleaned(spark, tmp_path):
     """Deleting every live child of a coarse partition must remove the
-    stale coarse rows (the dynamic-overwrite blind spot: an empty
-    recompute writes nothing, so the store rmtree-s the partition)."""
+    stale coarse rows (an empty recompute writes nothing, so the
+    staged rewrite deletes the touched partition)."""
     import os
 
     a, b = CELLS[0], CELLS[1]
@@ -247,7 +247,7 @@ def test_upsert_merge_path_honors_chunk_size(spark, tmp_path):
     store.upsert_h3dataframe_into_tableset(
         schema, winners(spark, [(a, 1, 0, 10)]), options=opts
     )
-    # second upsert takes the merge (dynamic-overwrite) path
+    # second upsert takes the merge (staged rewrite) path
     store.upsert_h3dataframe_into_tableset(
         schema, winners(spark, [(b, 2, 0, 20), (c, 3, 0, 30)]), options=opts
     )
@@ -262,3 +262,40 @@ def test_upsert_merge_path_honors_chunk_size(spark, tmp_path):
     ]
     # 3 live rows at 1 row/file -> at least 3 data files
     assert len(files) >= 3, files
+
+
+#: Spark jobs one upsert micro-batch into an existing tableset may run
+#: (measured: 8 in either layout with AQE on, 10 and 12 before the
+#: staged rewrite): the stats aggregation, one staged write merging the
+#: batch into the base table, and one staged recompute of the coarse
+#: level.
+UPSERT_MICROBATCH_MAX_JOBS = 8
+
+
+@pytest.mark.parametrize("auto_part", [True, False])
+def test_upsert_microbatch_jobs_ceiling(spark, tmp_path, auto_part):
+    """Job budget of one CDC micro-batch that updates, deletes and
+    inserts keys of an existing tableset, in the single-directory
+    ("global") and the declared layout. Counted through the status
+    tracker under a job group set around the call."""
+    schema = mutable_schema()
+    store = CellStore(spark, str(tmp_path / "wh"), auto_partitioning=auto_part)
+    old = [(c, 1, 0, i) for i, c in enumerate(CELLS[:30])]
+    new = [(c, 2, int(i % 4 == 0), i) for i, c in enumerate(CELLS[20:])]
+    store.upsert_h3dataframe_into_tableset(schema, winners(spark, old))
+    batch = winners(spark, new)
+    sc = spark.sparkContext
+    group = f"upsert-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "one upsert micro-batch")
+    try:
+        store.upsert_h3dataframe_into_tableset(schema, batch)
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= UPSERT_MICROBATCH_MAX_JOBS, len(jobs)
+
+    final = {c: (s, d, v) for c, s, d, v in old + new}
+    assert read_level(store, 6) == final
+    assert read_level(store, 4)[REGION] == (
+        2, 0, sum(v for s, d, v in final.values() if not d)
+    )

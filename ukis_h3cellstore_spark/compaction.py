@@ -76,11 +76,12 @@ def compact_df(
     2. the rows at res ≤ P after the pass (≤ 1/7^GROUP_LEVELS of the
        input) run the JVM window loop for the remaining coarse levels.
 
-    With ``persist`` (the default) the pass is computed once into a
-    local checkpoint, and phase 2 runs only when a row lies at or
-    below P: two jobs for the pass plus one emptiness check over the
-    checkpoint. Without it everything stays lazy and each consumer of
-    the result re-runs the pass.
+    With ``persist`` (the default) the result is an eager local
+    checkpoint, so callers read it without recomputing it: the pass is
+    checkpointed (two jobs), one emptiness check over it decides
+    whether phase 2 runs, and only when it does is the union of both
+    phases checkpointed once more. Without it everything stays lazy
+    and each consumer of the result re-runs the pass.
     """
     value_cols = [c for c in df.columns if c != h3index_column]
     h3col = F.col(h3index_column)
@@ -93,9 +94,10 @@ def compact_df(
     if max_res <= GROUP_LEVELS:
         # the whole hierarchy fits into basecell groups → pure pandas
         # pass, no JVM tail (sibling sets never span base cells)
-        return _compact_grouped_pandas(
+        out = _compact_grouped_pandas(
             df, h3index_column, value_cols, hx.h3_get_base_cell(h3col)
         )
+        return out.localCheckpoint(eager=True) if persist else out
 
     group_res = max_res - GROUP_LEVELS
     done = _compact_grouped_pandas(
@@ -119,7 +121,8 @@ def compact_df(
     tail_out = _compact_levels_jvm(
         tail_in, h3index_column, value_cols, group_res, persist
     )
-    return tail_out.unionByName(done.filter(res_col > group_res))
+    out = tail_out.unionByName(done.filter(res_col > group_res))
+    return out.localCheckpoint(eager=True) if persist else out
 
 
 def _unique_pairs(a: np.ndarray, b: np.ndarray):

@@ -24,12 +24,15 @@ sides, not IN-literal SQL, once they exceed a small threshold).
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import shutil
+import tempfile
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ukis_h3cellstore_spark import compaction, rollup
@@ -37,11 +40,7 @@ from ukis_h3cellstore_spark.frame import H3DataFrame
 from ukis_h3cellstore_spark.h3 import cells as h3c
 from ukis_h3cellstore_spark.h3 import expressions as hx
 from ukis_h3cellstore_spark import query as build_query
-from ukis_h3cellstore_spark.query import (
-    TableSetQuery,
-    build_table_query,
-    cells_predicate,
-)
+from ukis_h3cellstore_spark.query import TableSetQuery, build_table_query
 from ukis_h3cellstore_spark.schema import (
     CompactedTableSchema,
     ResolutionMetadata,
@@ -62,6 +61,67 @@ MAX_INLIST_CELLS = 4096
 #: scan the leftsemi fallback would pay at 100 TB, and it covers a
 #: res-3 partition layout (41,162 cells) outright.
 STATIC_PRUNE_MAX_PARTITIONS = 65_536
+
+
+def _h3_part_res(schema: CompactedTableSchema, resolution: int) -> int | None:
+    """Resolution of the H3 partition value of a table at
+    ``resolution``: ``None`` for base-cell partitioning, else the
+    lower-resolution parent's (reference ``partitioning.rs:98-130``)."""
+    if schema.h3_partitioning.kind == "basecell":
+        return None
+    return max(resolution - schema.h3_partitioning.resolution_difference, 0)
+
+
+def _h3_part(col: Column, part_res: int | None) -> Column:
+    """H3 partition value of the cells in ``col``."""
+    if part_res is None:
+        return hx.h3_get_base_cell(col)
+    return hx.h3_to_parent(col, part_res)
+
+
+def _h3_part_count(part_res: int | None) -> int:
+    """How many H3 partition values exist: the 122 base cells, or
+    every cell at ``part_res`` (2 + 120·7^r)."""
+    return 122 if part_res is None else 2 + 120 * 7**part_res
+
+
+def _partition_match(cols: list[str], rows: list[tuple]) -> Column:
+    """Rows whose partition columns ``cols`` equal one of the value
+    tuples ``rows``; a NULL value matches NULL (Spark writes it as the
+    ``__HIVE_DEFAULT_PARTITION__`` directory and reads it back as
+    NULL, so ``==`` would never find that partition)."""
+    if len(cols) == 1:
+        col = F.col(cols[0])
+        values = [r[0] for r in rows if r[0] is not None]
+        if len(values) < len(rows):
+            return col.isin(values) | col.isNull()
+        return col.isin(values)
+    return functools.reduce(
+        operator.or_,
+        (
+            functools.reduce(
+                operator.and_,
+                (F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(cols, row)),
+            )
+            for row in rows
+        ),
+        F.lit(False),
+    )
+
+
+def _leaf_dirs(root: str, depth: int) -> list[str]:
+    """Relative paths of the partition leaf directories under ``root``:
+    ``depth`` levels of ``column=value`` directories."""
+    level = [""]
+    for _ in range(depth):
+        level = [
+            os.path.join(rel, e.name)
+            for rel in level
+            if os.path.isdir(os.path.join(root, rel))
+            for e in os.scandir(os.path.join(root, rel))
+            if e.is_dir() and "=" in e.name
+        ]
+    return level
 
 
 @dataclass
@@ -261,15 +321,20 @@ class CellStore:
         resolution: int,
         mode: str = "schema",
     ) -> DataFrame:
-        h3col = F.col(schema.h3index_column())
+        # Spark stores "" like NULL, in the default partition directory,
+        # and reads both back as NULL: give the batch's rows the value
+        # the stored rows have, so partition matching and the engine
+        # merge treat old and new rows of that partition alike
+        types = dict(df.dtypes)
+        for c in schema.partition_by_columns:
+            if types.get(c) == "string":
+                df = df.withColumn(c, F.when(F.col(c) != "", F.col(c)))
         if mode == "global":
             part = F.lit(0).cast("long")
-        elif schema.h3_partitioning.kind == "basecell":
-            part = hx.h3_get_base_cell(h3col)
         else:
-            diff = schema.h3_partitioning.resolution_difference
-            target = max(resolution - diff, 0)
-            part = hx.h3_to_parent(h3col, target)
+            part = _h3_part(
+                F.col(schema.h3index_column()), _h3_part_res(schema, resolution)
+            )
         df = df.withColumn("h3part", part)
         tcol = schema.temporal_partition_column()
         if tcol is not None:
@@ -299,12 +364,7 @@ class CellStore:
             or schema.partition_by_columns
         ):
             return None
-        if schema.h3_partitioning.kind == "basecell":
-            bound = 122
-        else:
-            diff = schema.h3_partitioning.resolution_difference
-            target = max(meta.resolution - diff, 0)
-            bound = 122 * 7 ** min(target, 10)
+        bound = _h3_part_count(_h3_part_res(schema, meta.resolution))
         default = int(
             self.spark.conf.get("spark.sql.shuffle.partitions", "200")
         )
@@ -337,11 +397,39 @@ class CellStore:
         options: InsertOptions,
         batch_rows: int | None = None,
         merge: bool = False,
+        dedup: bool = False,
+        touched: list[tuple] | None = None,
     ) -> None:
-        """Append ``df`` to one pyramid table; ``merge`` applies the
-        table engine's merge to the batch itself on the way."""
+        """Write ``df`` into one pyramid table. A new table, or any
+        table without ``dedup``, gets an append; ``merge`` applies the
+        table engine's merge to the batch on the way.
+
+        With ``dedup`` a table that already holds data is merged in ONE
+        staged write: the rows of the partitions the batch touches (the
+        whole table in "global" mode) are read, unioned with the batch,
+        engine-merged and swapped in — the reference's partition-scoped
+        ``OPTIMIZE ... DEDUPLICATE`` (O11). Partition values derive
+        from the row itself, so duplicates never span partitions.
+        ``touched`` holds the batch's partition-value tuples when the
+        caller already knows them; otherwise one job collects them."""
         mode = self._table_mode(schema, meta, batch_rows)
         out = self._with_partition_columns(schema, df, meta.resolution, mode)
+        if dedup and os.path.isdir(self._table_path(schema.name, meta)):
+            old = self.read_table(schema, meta)
+            width = 1
+            if mode != "global":
+                part_cols = self._partition_columns(schema)
+                if touched is None:
+                    touched = [
+                        tuple(r)
+                        for r in out.select(*part_cols).distinct().collect()
+                    ]
+                old = old.filter(_partition_match(part_cols, touched))
+                width = max(len(touched), 1)
+            self._rewrite_partitions(
+                schema, meta, old.unionByName(out), mode, width, options, []
+            )
+            return
         self._record_table_mode(schema, meta, mode)
         (
             self._clustered(
@@ -352,6 +440,65 @@ class CellStore:
             .partitionBy(*self._partition_columns(schema))
             .parquet(self._table_path(schema.name, meta))
         )
+
+    def _rewrite_partitions(
+        self,
+        schema: CompactedTableSchema,
+        meta: ResolutionMetadata,
+        content: DataFrame,
+        mode: str,
+        width: int | None,
+        options: InsertOptions,
+        covers: list[str] | None,
+        merge: bool = True,
+    ) -> None:
+        """Replace partitions of one pyramid table by ``content``: the
+        complete new rows, partition columns included, of every
+        partition it holds. The rows are clustered (``_clustered``:
+        ``width`` tasks, engine-merged with ``merge``) into a staging
+        directory next to the table; then each staged leaf partition
+        directory replaces the table's. ``covers`` names leaf
+        directories (relative paths) that ``content`` covers in full:
+        those it staged no rows for are deleted; ``None`` covers the
+        whole table. Reading the table while writing the staging
+        directory needs no materialization in between: the table is
+        not touched until the write has finished.
+
+        Each replaced leaf is first renamed into a directory of its own
+        next to the table (``<table>.old.*``), then the staged leaf is
+        renamed in, and the old leaves are deleted once every staged
+        leaf is in place. A process that dies between the two renames
+        leaves that partition missing from the table, but its rows are
+        kept in the ``.old.*`` directory, which no later write
+        touches."""
+        path = self._table_path(schema.name, meta)
+        staging = path + ".staging"
+        part_cols = self._partition_columns(schema)
+        (
+            self._clustered(schema, content, width, merge)
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", options.max_num_rows_per_chunk)
+            .partitionBy(*part_cols)
+            .parquet(staging)
+        )
+        self._record_table_mode(schema, meta, mode)
+        staged = _leaf_dirs(staging, len(part_cols))
+        if covers is None:
+            covers = _leaf_dirs(path, len(part_cols))
+        aside = tempfile.mkdtemp(
+            prefix=os.path.basename(path) + ".old.", dir=os.path.dirname(path)
+        )
+        for rel in staged:
+            target, kept = os.path.join(path, rel), os.path.join(aside, rel)
+            if os.path.isdir(target):
+                os.makedirs(os.path.dirname(kept), exist_ok=True)
+                os.rename(target, kept)
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.rename(os.path.join(staging, rel), target)
+        for rel in set(covers) - set(staged):
+            shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
+        shutil.rmtree(aside)
+        shutil.rmtree(staging)
 
     def read_table(
         self, schema: CompactedTableSchema, meta: ResolutionMetadata
@@ -386,7 +533,9 @@ class CellStore:
         compact (unless a Sum column disables it) → split by resolution
         → validate → write max-res rows to the base table / coarser rows
         to compacted tables → rollup chain fine→coarse across base
-        resolutions → optional dedup of touched data.
+        resolutions. With ``deduplicate_after_insert`` a table that
+        already holds data is merged with the batch in the same write
+        (see ``_write_table``).
         """
         options = options or InsertOptions()
         schema.validate()
@@ -421,17 +570,20 @@ class CellStore:
         if options.create_schema and not self.tableset_exists(schema.name):
             self.create_tableset(schema)
 
+        # the batch is computed exactly once: compact_df hands back a
+        # local checkpoint, an uncompacted batch is persisted
         if schema.compaction_enabled:
             df = compaction.compact_df(df, h3name, max_res=schema.max_h3_resolution)
-
-        res_col = hx.h3_get_resolution(F.col(h3name))
-        df = df.withColumn("__res", res_col).persist()
+        else:
+            df = df.persist()
+        persisted: list[DataFrame] = []
         try:
+            split = df.withColumn("__res", hx.h3_get_resolution(F.col(h3name)))
             # one job gives the levels present AND the batch volume,
             # which steers the adaptive physical layout
             level_rows = {
                 r["__res"]: r["count"]
-                for r in df.groupBy("__res").count().collect()
+                for r in split.groupBy("__res").count().collect()
             }
             found = sorted(level_rows)
             if not found:
@@ -445,27 +597,19 @@ class CellStore:
                     f"dataframe contains resolution {max(found)} > tableset max {max_res}"
                 )
 
-            written: list[ResolutionMetadata] = []
-            # tables that already hold data need a cross-insert merge
-            # after publish; freshly-created ones are deduped in-flight
-            # below, so the post-insert rewrite can skip them
-            existed_before = {
-                m: os.path.isdir(self._table_path(schema.name, m))
-                for m in schema.resolution_metadata()
-            }
             # split by resolution: max-res rows → base table, coarser →
             # compacted tables (reference insert.rs:151-170)
             level_dfs: dict[ResolutionMetadata, DataFrame] = {}
-            for r in sorted(found):
+            for r in found:
                 meta = ResolutionMetadata(r, r != max_res)
                 if meta.is_compacted and not schema.compaction_enabled:
                     raise SchemaError(
                         f"resolution {r} rows require compacted tables but "
                         "compaction is disabled for this schema"
                     )
-                level_dfs[meta] = df.filter(F.col("__res") == r).drop("__res")
+                level_dfs[meta] = split.filter(F.col("__res") == r).drop("__res")
             # the split-level writes and the rollup chain are
-            # independent jobs over the persisted input — run the
+            # independent jobs over the materialized batch — run the
             # writes on a small thread pool so they overlap (each
             # thread re-enters the insert's job group so
             # cancel_insert() still reaches every job)
@@ -487,28 +631,31 @@ class CellStore:
                     f"{'c' if meta.is_compacted else 'b'}]",
                     interruptOnCancel=True,
                 )
+                # a table that already holds data is merged with the
+                # batch in the same write (the reference relies on the
+                # MergeTree engine + OPTIMIZE)
                 self._write_table(
-                    schema, meta, level_df, options, batch_rows, merge=merge
+                    schema,
+                    meta,
+                    level_df,
+                    options,
+                    batch_rows,
+                    merge=merge,
+                    dedup=options.deduplicate_after_insert,
                 )
 
-            written_frames: dict[ResolutionMetadata, DataFrame] = {}
             with ThreadPoolExecutor(max_workers=3) as pool:
-                futures = []
-                for meta, level_df in level_dfs.items():
-                    # in-flight engine merge of the batch itself (the
-                    # reference relies on the MergeTree engine +
-                    # OPTIMIZE; merging inside the write's own shuffle
-                    # replaces a read-back rewrite for fresh tables)
-                    futures.append(pool.submit(_write, meta, level_df, True))
-                    written.append(meta)
-                    written_frames[meta] = level_df
+                # in-flight engine merge of the batch itself
+                futures = [
+                    pool.submit(_write, meta, level_df, True)
+                    for meta, level_df in level_dfs.items()
+                ]
 
                 # rollup chain (reference insert.rs:278-548): adjacent
                 # base resolution pairs, fine → coarse; levels depend
                 # on each other but their writes overlap the rest
                 bases = sorted(schema.h3_base_resolutions, reverse=True)
                 current: DataFrame | None = None
-                persisted: list[DataFrame] = []
                 for source_res, target_res in zip(bases, bases[1:]):
                     src_parts = []
                     base_meta = ResolutionMetadata(source_res, False)
@@ -532,44 +679,13 @@ class CellStore:
                     persisted.append(level)
                     meta = ResolutionMetadata(target_res, False)
                     futures.append(pool.submit(_write, meta, level, False))
-                    written.append(meta)
-                    written_frames[meta] = level
                     current = level
 
                 for fut in futures:
                     fut.result()
-
-            if options.deduplicate_after_insert:
-                # rollup outputs are already grouped per key and fresh
-                # tables were merged in-flight — only tables that held
-                # data before this insert need the cross-insert merge,
-                # and only in the PARTITIONS this batch touched (the
-                # reference's partition-scoped OPTIMIZE, O11)
-                touched_existing = [
-                    m for m in set(written) if existed_before.get(m)
-                ]
-                part_cols = self._partition_columns(schema)
-                touched_vals: dict[ResolutionMetadata, list] = {}
-                for m in touched_existing:
-                    mode = self._table_mode(schema, m)
-                    if mode == "global":
-                        continue  # one partition: whole-table rewrite
-                    pdf = self._with_partition_columns(
-                        schema, written_frames[m], m.resolution, mode
-                    )
-                    touched_vals[m] = (
-                        pdf.select(*part_cols).distinct().collect()
-                    )
-                for p in persisted:
-                    p.unpersist()
-                if touched_existing:
-                    self.deduplicate_tableset(
-                        schema.name, touched_existing, touched_vals
-                    )
-            else:
-                for p in persisted:
-                    p.unpersist()
         finally:
+            for p in persisted:
+                p.unpersist()
             df.unpersist()
             if sc is not None:
                 sc.setJobGroup("", "")
@@ -594,15 +710,16 @@ class CellStore:
         :func:`~ukis_h3cellstore_spark.streaming.cdc_upsert_jvm`
         output. The pipeline:
 
-        1. base level: append + partition-scoped keep-max-version merge
-           (``_apply_engine_merge``'s versioned Replacing branch), so
+        1. base level: one staged write of the touched base partitions
+           merged with the batch (``_write_table``; keep-max-version
+           via ``_apply_engine_merge``'s versioned Replacing branch), so
            the base table converges to the latest row per cell with
            tombstones retained;
         2. every coarser base resolution: the TOUCHED coarse partitions
            are recomputed from the post-merge base live view
-           (``deleted_column = false``) and replaced via dynamic
-           partition overwrite — incremental materialized-view
-           maintenance, never a full-pyramid rebuild.
+           (``deleted_column = false``) and swapped in by the same
+           staged rewrite — incremental materialized-view maintenance,
+           never a full-pyramid rebuild.
 
         Correctness across micro-batches: the last batch that touches a
         coarse partition recomputes it from every child's FINAL base
@@ -652,38 +769,31 @@ class CellStore:
             reverse=True,
         )
         df = df.persist()
-        checkpointed = None
         try:
             # ONE aggregation job collects the batch stats AND every
-            # touched-partition value set (base + each coarse target) —
-            # previously 2 + L separate jobs per micro-batch (stats
-            # collect, base-partition distinct, one distinct per coarse
-            # level). Partition values derive from the row itself, so
-            # the sets are exact (guide §1.2/§2.4: fewer passes).
-            def _schema_part(res: int):
-                if schema.h3_partitioning.kind == "basecell":
-                    return hx.h3_get_base_cell(F.col(h3name))
-                diff = schema.h3_partitioning.resolution_difference
-                return hx.h3_to_parent(F.col(h3name), max(res - diff, 0))
+            # touched-partition value set (base + each coarse target).
+            # Partition values derive from the row itself, so the sets
+            # are exact.
+            def _parts(res: int) -> Column:
+                return F.collect_set(
+                    _h3_part(F.col(h3name), _h3_part_res(schema, res))
+                )
 
             res_col = hx.h3_get_resolution(F.col(h3name))
             aggs = [
                 F.count(F.lit(1)).alias("n"),
                 F.min(res_col).alias("lo"),
                 F.max(res_col).alias("hi"),
-                F.collect_set(_schema_part(max_res)).alias("p_base"),
+                _parts(max_res).alias("p_base"),
             ]
             for tres in coarse_levels:
-                aggs.append(
-                    F.collect_set(_schema_part(tres)).alias(f"p_{tres}")
-                )
+                aggs.append(_parts(tres).alias(f"p_{tres}"))
             stats = df.agg(*aggs).collect()[0]
             if stats["n"] == 0:
                 return
-            # create AFTER the empty-batch early return: with the
-            # streaming sink's isEmpty pre-check gone (r14), an
-            # all-empty stream would otherwise materialize an empty
-            # tableset as a side effect
+            # create AFTER the empty-batch early return: an all-empty
+            # stream must not materialize an empty tableset as a side
+            # effect
             if options.create_schema and not self.tableset_exists(
                 schema.name
             ):
@@ -695,93 +805,32 @@ class CellStore:
                 )
             batch_rows = stats["n"] if self.auto_partitioning else None
             base_meta = ResolutionMetadata(max_res, False)
-            path = self._table_path(schema.name, base_meta)
-            existed = os.path.isdir(path)
-            mode = self._table_mode(schema, base_meta, batch_rows)
-            merged = self._apply_engine_merge(schema, df)
-            # `live` covers the post-merge touched base partitions;
-            # `live_is_full` marks it as the WHOLE post-merge live base
-            live: DataFrame | None = None
-            live_is_full = False
-            if existed and options.deduplicate_after_insert:
-                # single-write merge: union the batch with the touched
-                # existing partitions and dynamic-overwrite them ONCE.
-                # The old shape appended the merged batch and then
-                # immediately re-read + re-merged + rewrote the same
-                # partitions (deduplicate_tableset) — every batch row
-                # was written twice and the touched partitions read
-                # twice (guide §2.4: remove passes outright). The
-                # engine merge is an associative per-key max/sum, so
-                # merge(old ∪ merge(batch)) == merge(old ∪ batch).
-                touched_vals = (
-                    [0] if mode == "global" else sorted(stats["p_base"])
-                )
-                existing = (
-                    self.read_table(schema, base_meta)
-                    .filter(F.col("h3part").isin(touched_vals))
-                    .drop("h3part", "tpart")
-                )
-                pdf_merged = self._apply_engine_merge(
-                    schema, existing.unionByName(df)
-                )
-                out = self._with_partition_columns(
-                    schema, pdf_merged, max_res, mode
-                )
-                # one shuffle task per touched partition value — a hash
-                # repartition on h3part can never use more tasks than
-                # distinct values, so the default-64 shuffle was mostly
-                # empty task-scheduling overhead
-                out = (
-                    out.repartition(len(touched_vals), F.col("h3part"))
-                    .sortWithinPartitions(*schema.sort_key())
-                    .localCheckpoint(eager=True)
-                )
-                checkpointed = out
-                (
-                    out.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .option(
-                        "maxRecordsPerFile", options.max_num_rows_per_chunk
-                    )
-                    .partitionBy("h3part")
-                    .parquet(path)
-                )
-                self._record_table_mode(schema, base_meta, mode)
-                # the checkpoint holds ALL post-merge rows of the
-                # touched base partitions: reusable as the coarse
-                # refresh source (saves the base-table read-back) when
-                # it covers everything a refresh can touch
-                live = out.drop("h3part")
-                live_is_full = mode == "global"
-            else:
-                self._write_table(schema, base_meta, merged, options, batch_rows)
-                if not existed:
-                    # fresh table: its full content IS the merged batch
-                    live = merged
-                    live_is_full = True
+            # the engine merge is an associative per-key max, so
+            # merge(old ∪ batch) is the post-merge base
+            self._write_table(
+                schema,
+                base_meta,
+                df,
+                options,
+                batch_rows,
+                merge=True,
+                dedup=options.deduplicate_after_insert,
+                touched=[(v,) for v in stats["p_base"]],
+            )
             # always the REAL per-level value sets: _refresh_coarse_level
             # resolves mode PER LEVEL (a coarse table can resolve
-            # 'schema' while the base is 'global'), and its global
-            # branch never reads touched_vals — substituting [0] from
-            # the BASE mode would scope a schema-mode coarse refresh to
-            # partition 0 and leave the others stale
-            touched_by_level = {
-                tres: sorted(stats[f"p_{tres}"]) for tres in coarse_levels
-            }
+            # 'schema' while the base is 'global')
             for tres in coarse_levels:
                 self._refresh_coarse_level(
                     schema,
                     base_meta,
                     tres,
                     batch_rows,
-                    touched_by_level[tres],
-                    live=live,
-                    live_is_full=live_is_full,
+                    sorted(stats[f"p_{tres}"]),
+                    options,
                 )
         finally:
             df.unpersist()
-            if checkpointed is not None:
-                checkpointed.unpersist()
 
     def _refresh_coarse_level(
         self,
@@ -790,92 +839,53 @@ class CellStore:
         tres: int,
         batch_rows: int | None,
         touched_vals: list,
-        live: DataFrame | None = None,
-        live_is_full: bool = False,
+        options: InsertOptions,
     ) -> None:
-        """Recompute one coarser base level from the post-merge finest
-        base table's live view — every coarse level derives DIRECTLY
-        from the finest rows (not chained), so order-sensitive
+        """Recompute one coarser base level from the live rows
+        (``deleted_column = false``) of the finest base table as it is
+        on disk after the batch's merge — every coarse level derives
+        DIRECTLY from the finest rows (not chained), so order-sensitive
         aggregates (Average) see the true leaf population.
 
-        ``touched_vals`` is the batch's coarse-partition value set,
-        precomputed by the caller's single stats aggregation. ``live``
-        (when given) is the caller's already-checkpointed post-merge
-        frame covering the touched BASE partitions — reused as the
-        refresh source instead of re-reading the base table from disk
-        (one read-back saved per level per micro-batch). It is a valid
-        source iff it covers every child row a refresh can touch:
-        always when ``live_is_full`` (fresh table / global-mode base,
-        i.e. the frame IS the whole table), and for the partition-
-        scoped branch under ``basecell`` partitioning (a coarse
-        partition's children live in the same basecell partition the
-        batch touched)."""
-        h3name = schema.h3index_column()
+        A "global"-mode level is recomputed whole. A "schema"-mode
+        level is recomputed only in the partitions the batch touched
+        (``touched_vals``, from the caller's stats aggregation): only
+        their children are read and rolled up, and a touched partition
+        whose children are all tombstones stages no rows, so the
+        rewrite deletes it. Both go through ``_rewrite_partitions``."""
         meta = ResolutionMetadata(tres, False)
-        path = self._table_path(schema.name, meta)
         mode = self._table_mode(schema, meta, batch_rows)
-        scoped_ok = live_is_full or schema.h3_partitioning.kind == "basecell"
-        if live is None or (mode == "global" and not live_is_full) or (
-            mode != "global" and not scoped_ok
-        ):
-            live = self.read_table(schema, base_meta).drop("h3part", "tpart")
+        live = self.read_table(schema, base_meta)
         if schema.deleted_column:
             live = live.filter(~F.col(schema.deleted_column).cast("boolean"))
-        sort_cols = schema.sort_key()
-        if mode == "global":
-            # single-directory table: full recompute + atomic swap
-            rolled = rollup.rollup_level(schema, live, base_meta.resolution, tres)
-            out = self._with_partition_columns(schema, rolled, tres, mode)
-            tmp = path + "__upsert_tmp"
-            (
-                out.repartition(1, F.col("h3part"))
-                .sortWithinPartitions(*sort_cols)
-                .write.mode("overwrite")
-                .partitionBy("h3part")
-                .parquet(tmp)
-            )
-            if os.path.isdir(path):
-                shutil.rmtree(path)
-            os.rename(tmp, path)
-            self._mode_cache.pop(self._mode_path(schema.name, meta), None)
-            self._record_table_mode(schema, meta, mode)
-            return
-        # coarse partition value, computable from a CHILD cell directly
-        # (partition parents compose through the resolution chain)
-        def cpart(col):
-            if schema.h3_partitioning.kind == "basecell":
-                return hx.h3_get_base_cell(col)
-            diff = schema.h3_partitioning.resolution_difference
-            return hx.h3_to_parent(col, max(tres - diff, 0))
-
-        # pre-filter BEFORE the rollup aggregation: only touched coarse
-        # partitions' children participate (partition-scoped refresh)
-        live = live.filter(cpart(F.col(h3name)).isin(touched_vals))
-        rolled = rollup.rollup_level(schema, live, base_meta.resolution, tres)
-        out = (
-            self._with_partition_columns(schema, rolled, tres, mode)
-            .repartition(max(len(touched_vals), 1), F.col("h3part"))
-            .sortWithinPartitions(*sort_cols)
-            .persist()
+        covers, width = None, 1
+        if mode != "global":
+            part_res = _h3_part_res(schema, tres)
+            if self._table_mode(schema, base_meta) == "global":
+                key = _h3_part(F.col(schema.h3index_column()), part_res)
+            else:
+                # each base partition lies inside one coarse partition
+                # (partition parents compose through the resolution
+                # chain): filtering its value prunes the scan
+                key = F.col("h3part")
+                if part_res is not None:
+                    key = hx.h3_to_parent(key, part_res)
+            live = live.filter(key.isin(touched_vals))
+            covers = [f"h3part={v}" for v in touched_vals]
+            width = max(len(touched_vals), 1)
+        rolled = rollup.rollup_level(
+            schema, live.drop("h3part"), base_meta.resolution, tres
         )
-        try:
-            present = {r["h3part"] for r in out.select("h3part").distinct().collect()}
-            # tombstone-only partitions produce no recomputed rows —
-            # dynamic overwrite would leave their stale files in place
-            for v in set(touched_vals) - present:
-                pdir = os.path.join(path, f"h3part={v}")
-                if os.path.isdir(pdir):
-                    shutil.rmtree(pdir)
-            if present:
-                (
-                    out.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("h3part")
-                    .parquet(path)
-                )
-            self._record_table_mode(schema, meta, mode)
-        finally:
-            out.unpersist()
+        self._rewrite_partitions(
+            schema,
+            meta,
+            self._with_partition_columns(schema, rolled, tres, mode),
+            mode,
+            width,
+            options,
+            covers,
+            merge=False,
+        )
 
     def cancel_insert(self) -> None:
         """Cancel a running insert from another thread (reference
@@ -933,86 +943,32 @@ class CellStore:
 
     # ----------------------------------------------------------------- Q5 dedup
 
-    def deduplicate_tableset(
-        self,
-        name: str,
-        metas: list[ResolutionMetadata] | None = None,
-        touched_partitions: dict[ResolutionMetadata, list] | None = None,
-    ) -> None:
+    def deduplicate_tableset(self, name: str) -> None:
         """Reference Q5 (`deduplicate_schema`, optimize.rs:20-113):
-        OPTIMIZE ... DEDUPLICATE ≈ full-row distinct rewrite of the
-        touched tables. Table-engine semantics beyond plain dedup
+        OPTIMIZE ... DEDUPLICATE ≈ full-row distinct rewrite of every
+        table of the set. Table-engine semantics beyond plain dedup
         (Replacing/Summing/Aggregating merge) are applied here as well,
         which *strengthens* the reference's lazy merge into a
-        deterministic state (SURVEY §7.4.3).
-
-        ``touched_partitions`` maps a table to the partition-column
-        value rows a batch touched: the rewrite is then PARTITION-
-        scoped — only those parquet partitions are read, merged and
-        replaced (dynamic partition overwrite), the reference's
-        partition-scoped ``OPTIMIZE ... PARTITION`` (O11). Correct
-        because partition values derive from the row itself, so
-        duplicates can never span partitions. Without it the whole
-        table rewrites (the public API's behavior), and so does a
-        "global"-mode table, whose one partition IS the whole table:
-        read, merge into a temp directory, swap — one exchange, one
-        write, no materialization."""
+        deterministic state (SURVEY §7.4.3). Each table is read,
+        engine-merged and swapped in whole through the same staged
+        rewrite an insert uses (``_rewrite_partitions``): one exchange
+        and one write per table, no materialization. Inserts already
+        merge the partitions they touch (``deduplicate_after_insert``),
+        so this is only needed after inserts that skipped it."""
         schema = self.get_schema(name)
-        metas = metas or [
-            m
-            for m in schema.resolution_metadata()
-            if os.path.isdir(self._table_path(name, m))
-        ]
-        part_cols = self._partition_columns(schema)
-        for meta in metas:
-            path = self._table_path(name, meta)
-            if not os.path.isdir(path):
+        for meta in schema.resolution_metadata():
+            if not os.path.isdir(self._table_path(name, meta)):
                 continue
-            df = self.spark.read.schema(self._read_schema(schema)).parquet(path)
-            touched = (
-                touched_partitions.get(meta) if touched_partitions else None
+            mode = self._table_mode(schema, meta)
+            self._rewrite_partitions(
+                schema,
+                meta,
+                self.read_table(schema, meta),
+                mode,
+                self._write_width(schema, meta, mode),
+                InsertOptions(),
+                None,
             )
-            if touched is not None and not touched:
-                continue
-            mode = self._table_mode(schema, meta)  # preserve layout marker
-            if touched is not None and mode != "global":
-                cond = None
-                for row in touched:
-                    clause = None
-                    for c in part_cols:
-                        eq = F.col(c) == F.lit(row[c])
-                        clause = eq if clause is None else clause & eq
-                    cond = clause if cond is None else cond | clause
-                # materialize before overwriting the path being read
-                # (breaks the logical read-write cycle; dynamic
-                # overwrite then replaces ONLY the touched partitions).
-                # Width = touched-value count: a hash repartition on
-                # the partition columns cannot occupy more tasks than
-                # distinct value combinations.
-                deduped = self._clustered(
-                    schema, df.filter(cond), max(len(touched), 1), merge=True
-                ).localCheckpoint(eager=True)
-                (
-                    deduped.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(*part_cols)
-                    .parquet(path)
-                )
-                deduped.unpersist()
-            else:
-                tmp = path + "__dedup_tmp"
-                (
-                    self._clustered(
-                        schema, df, self._write_width(schema, meta, mode), merge=True
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy(*part_cols)
-                    .parquet(tmp)
-                )
-                shutil.rmtree(path)
-                os.rename(tmp, path)
-                self._mode_cache.pop(self._mode_path(name, meta), None)
-            self._record_table_mode(schema, meta, mode)
 
     def _apply_engine_merge(
         self, schema: CompactedTableSchema, df: DataFrame
@@ -1401,13 +1357,9 @@ class CellStore:
         if self._table_mode(schema, meta) == "global":
             return df
         h3name = schema.h3index_column()
-        if schema.h3_partitioning.kind == "basecell":
-            part_res: int | None = None
-            pv_bound = 122  # base cells are fixed by the H3 spec
-        else:
-            diff = schema.h3_partitioning.resolution_difference
-            part_res = max(meta.resolution - diff, 0)
-            pv_bound = 2 + 120 * 7**part_res  # total H3 cells at part_res
+        part_res = _h3_part_res(schema, meta.resolution)
+        pv_bound = _h3_part_count(part_res)
+        if part_res is not None:
             if n_probe is not None and probe_res is not None:
                 pv_bound = min(
                     pv_bound, n_probe * 7 ** max(0, part_res - probe_res)
@@ -1424,12 +1376,9 @@ class CellStore:
             src = probe_df
         else:
             src = table_cells_df
-        col = F.col(h3name)
-        if part_res is None:
-            expr = hx.h3_get_base_cell(col)
-        else:
-            expr = hx.h3_to_parent(col, part_res)
-        vals_df = src.select(expr.alias("h3part")).distinct()
+        vals_df = src.select(
+            _h3_part(F.col(h3name), part_res).alias("h3part")
+        ).distinct()
         values: list[int] | None = None
         if pv_bound <= STATIC_PRUNE_MAX_PARTITIONS:
             values = [r["h3part"] for r in vals_df.collect()]
@@ -1517,12 +1466,11 @@ class CellStore:
         basecell IN-list would wrongly exclude it)."""
         if self._table_mode(schema, meta) == "global":
             return df
-        if schema.h3_partitioning.kind == "basecell":
+        part_res = _h3_part_res(schema, meta.resolution)
+        if part_res is None:
             values = sorted({h3c.get_base_cell(c) for c in cells})
         else:
-            diff = schema.h3_partitioning.resolution_difference
-            target = max(meta.resolution - diff, 0)
-            values = sorted({h3c.cell_to_parent(c, target) for c in cells})
+            values = sorted({h3c.cell_to_parent(c, part_res) for c in cells})
         if len(values) <= MAX_INLIST_CELLS:
             df = df.filter(F.col("h3part").isin(values))
         elif len(values) <= STATIC_PRUNE_MAX_PARTITIONS:
