@@ -534,6 +534,131 @@ class TestQueryCellsDf:
         assert via_df == via_list and via_df[0][1] == 49
 
 
+    def test_all_invalid_list_rejected_as_empty(self, spark, dfq_store):
+        # a list of only invalid cells is an empty cell set, as an
+        # empty frame is (it used to fall through to "no tables
+        # satisfy the query")
+        store, _region, _cells7 = dfq_store
+        with pytest.raises(ValueError, match="empty cell list"):
+            store.query_tableset_cells("dfq", [0, 12345], 7)
+
+
+class TestListFrameDifferential:
+    """The list and the frame API are one pipeline over two cell-set
+    backings; over random uniform-resolution cell sets they must return
+    equal rows for every combination of: query kind (auto, a template
+    with ``<[h3indexes]>``, one without), ``do_uncompact``, probe
+    resolution coarser than / equal to / finer than the target, a set
+    on a hexagon or on a pentagon base cell, ``query.MAX_INLIST_CELLS``
+    at its default or patched to 2 (so the list side switches to
+    semi-joins), and global or schema table layout."""
+
+    TEMPLATES = {
+        "auto": None,
+        "cells": "select h3index, value from <[table]> "
+        "where h3index in <[h3indexes]> and value >= 1",
+        "no_cells": "select h3index, value from <[table]> where value >= 1",
+    }
+
+    @pytest.fixture(scope="class", params=["global", "schema"])
+    def diff_store(self, request, spark, tmp_path_factory):
+        from ukis_h3cellstore_spark import (
+            CellStore,
+            CompactedTableSchemaBuilder,
+        )
+        from ukis_h3cellstore_spark.h3 import cells as h3c
+
+        schema = (
+            CompactedTableSchemaBuilder("diffq")
+            .h3_base_resolutions([4, 5, 6])
+            .add_h3index_column()
+            .add_column("value", "Int32")
+            .build()
+        )
+        # res-3 regions: one on hexagon base cell 60, one centred on
+        # pentagon base cell 4; values are uniform per res-5 parent
+        # (hexagon) or per region (pentagon), so both compact
+        regions = {
+            False: h3c.build_cell(60, [1, 2, 3]),
+            True: h3c.build_cell(4, [0, 0, 0]),
+        }
+        rows = [
+            (c, h3c.get_digit(c, 5) % 3)
+            for c in h3c.cell_to_children(regions[False], 6)
+        ] + [(c, 2) for c in h3c.cell_to_children(regions[True], 6)]
+        store = CellStore(
+            spark,
+            str(tmp_path_factory.mktemp("diffq")),
+            auto_partitioning=request.param == "global",
+        )
+        store.insert_h3dataframe_into_tableset(
+            schema, spark.createDataFrame(rows, "h3index long, value int")
+        )
+        return store, regions
+
+    def test_list_and_frame_agree(self, spark, diff_store):
+        import itertools
+        from unittest import mock
+
+        from hypothesis import HealthCheck, given, settings
+        from hypothesis import strategies as st
+
+        from ukis_h3cellstore_spark import query as Q
+        from ukis_h3cellstore_spark.h3 import cells as h3c
+        from ukis_h3cellstore_spark.query import TableSetQuery, cells_frame
+
+        store, regions = diff_store
+
+        def rows(h3df):
+            return sorted(
+                (r["h3index"], r["value"])
+                for r in h3df.df.select("h3index", "value").collect()
+            )
+
+        combos = list(
+            itertools.product(
+                self.TEMPLATES.values(),
+                (True, False),  # do_uncompact
+                (-1, 0, 1),  # probe resolution relative to the target
+                (False, True),  # pentagon region
+                (Q.MAX_INLIST_CELLS, 2),
+            )
+        )
+
+        @given(data=st.data())
+        @settings(
+            max_examples=1,
+            deadline=None,
+            suppress_health_check=list(HealthCheck),
+        )
+        def prop(data):
+            for template, uncompact, rel, pentagon, inlist in combos:
+                target = data.draw(st.sampled_from([5, 6]))
+                pool = h3c.cell_to_children(regions[pentagon], target + rel)
+                cells = data.draw(
+                    st.lists(
+                        st.sampled_from(pool), min_size=1, max_size=5, unique=True
+                    )
+                )
+                query = template and TableSetQuery.from_template(template)
+                with mock.patch.object(Q, "MAX_INLIST_CELLS", inlist):
+                    via_list = store.query_tableset_cells(
+                        "diffq", cells, target, query, uncompact
+                    )
+                    via_frame = store.query_tableset_cells_df(
+                        "diffq",
+                        cells_frame(spark, "h3index", cells),
+                        target,
+                        query,
+                        uncompact,
+                    )
+                    assert rows(via_list) == rows(via_frame), (
+                        template, uncompact, rel, pentagon, inlist, target, cells
+                    )
+
+        prop()
+
+
 class TestSimhashGuard:
     def test_guarded_matches_unguarded_when_sparse(self, spark):
         docs = spark.createDataFrame(

@@ -1,15 +1,16 @@
 """Round-13 tests: size-conditioned broadcast hints on the
 DataFrame-probe Q2 path (verdict r12 "what's wrong #1").
 
-The planet-scale query path (``query_tableset_cells_df`` /
-``build_table_query_df`` / ``uncompact_df`` subset restrict /
-``_prune_partitions_df``) used to FORCE ``F.broadcast`` on the probe
-cell frame; at the path's own design point (a res-8 continent AOI is
-76M+ cells) the hint overrides Spark's size threshold into a multi-GB
-broadcast build. Now the hint is applied only when the caller's
-arithmetic bound on the cell count (stats ``n`` · 7^diff — known
-without a count job) is at most ``query.BROADCAST_MAX_CELLS``;
-otherwise the plain leftsemi is emitted and AQE picks the strategy.
+The planet-scale query path (``query_tableset_cells_df``, its per-table
+select, the ``uncompact_df`` subset restrict and partition pruning)
+used to FORCE ``F.broadcast`` on the probe cell frame; at the path's
+own design point (a res-8 continent AOI is 76M+ cells) the hint
+overrides Spark's size threshold into a multi-GB broadcast build. Now
+the hint is applied only when the caller's arithmetic bound on the cell
+count (stats ``n`` · 7^diff — known without a count job) is at most
+``query.BROADCAST_MAX_CELLS``; otherwise the plain leftsemi is emitted
+and AQE picks the strategy. The per-table select takes that decision
+from ``query.cells_probe``.
 
 These tests assert the HINT at the optimized-logical-plan level
 (``rightHint=(strategy=broadcast)``) rather than the physical join
@@ -61,19 +62,23 @@ class TestBuildTableQueryDfHint:
     def test_small_bound_gets_hint(self, spark, table_df):
         from ukis_h3cellstore_spark import query as bq
 
-        out = bq.build_table_query_df(
-            spark, table_df, "h3index", self._probe(spark), None,
-            ["h3index", "value"], n_cells=5,
+        out = bq.build_table_query(
+            spark, table_df, "h3index",
+            bq.cells_probe(spark, "h3index", self._probe(spark), 5), None,
+            ["h3index", "value"],
         )
         assert _has_broadcast_hint(out)
 
     def test_large_bound_no_hint(self, spark, table_df):
         from ukis_h3cellstore_spark import query as bq
 
-        out = bq.build_table_query_df(
-            spark, table_df, "h3index", self._probe(spark), None,
+        out = bq.build_table_query(
+            spark, table_df, "h3index",
+            bq.cells_probe(
+                spark, "h3index", self._probe(spark), bq.BROADCAST_MAX_CELLS + 1
+            ),
+            None,
             ["h3index", "value"],
-            n_cells=bq.BROADCAST_MAX_CELLS + 1,
         )
         assert not _has_broadcast_hint(out)
 
@@ -83,9 +88,10 @@ class TestBuildTableQueryDfHint:
         # continent
         from ukis_h3cellstore_spark import query as bq
 
-        out = bq.build_table_query_df(
-            spark, table_df, "h3index", self._probe(spark), None,
-            ["h3index", "value"], n_cells=None,
+        out = bq.build_table_query(
+            spark, table_df, "h3index",
+            bq.cells_probe(spark, "h3index", self._probe(spark), None), None,
+            ["h3index", "value"],
         )
         assert not _has_broadcast_hint(out)
 

@@ -592,6 +592,90 @@ def test_overlapping_insert_jobs_ceiling(spark, tmp_path):
     )
 
 
+#: Spark jobs of Q2 reads on a [4, 6, 8] tableset (AQE on, 4 cores).
+#: Building a query over 300 res-8 cells handed over as a frame and
+#: asked at res 6: its stats job, the checkpointed res-4 normalization
+#: and, in the declared layout, one partition-value collect per table
+#: — the same counts as before the list and frame APIs shared one
+#: pipeline.
+QUERY_FRAME_BUILD_MAX_JOBS = {True: 3, False: 5}  # by auto_partitioning
+#: One Traverser step at res 8 (the fetch, its emptiness check and the
+#: consumer's collect): 6 before the final restrict of a driver-known
+#: set became a literal IN instead of a broadcast semi-join.
+TRAVERSER_STEP_MAX_JOBS = 2
+
+
+def _jobs_run_by(spark, action):
+    """Run ``action``; return its result and the number of Spark jobs
+    it ran, read from the status tracker: this thread's jobs under a job
+    group set around the call, plus new jobs outside any group (the
+    Traverser fetches on a pool thread, which carries none)."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    group = f"q2-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs ceiling")
+    try:
+        out = action()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store up to date
+    jobs = set(tracker.getJobIdsForGroup(group))
+    jobs |= set(tracker.getJobIdsForGroup()) - before
+    return out, len(jobs)
+
+
+@pytest.mark.parametrize("auto_part", [True, False])
+def test_query_jobs_ceiling(spark, tmp_path, auto_part):
+    """Job budget of the Q2 read path: a list-backed query builds with
+    no Spark job, a frame-backed one with its stats and normalization
+    jobs only, and a traversal step runs a bounded number."""
+    from ukis_h3cellstore_spark import traversal as T
+    from ukis_h3cellstore_spark.query import cells_frame
+
+    store = CellStore(spark, str(tmp_path / "wh"), auto_partitioning=auto_part)
+    schema = (
+        CompactedTableSchemaBuilder("q2_jobs")
+        .h3_base_resolutions([4, 6, 8])
+        .add_h3index_column()
+        .add_aggregated_column("cls", "UInt8", "SetNullOnConflict", nullable=True)
+        .build()
+    )
+    a, b = (h3c.build_cell(20, [1, 2, 3, 4, d]) for d in (0, 1))
+    cells = [c for p in (a, b) for c in h3c.cell_to_children(p, 8)]
+    store.insert_h3dataframe_into_tableset(
+        schema,
+        spark.createDataFrame(
+            [(c, h3c.get_digit(c, 8) % 2) for c in cells], "h3index long, cls int"
+        ),
+    )
+    kids6 = h3c.cell_to_children(a, 6)
+
+    listed, jobs = _jobs_run_by(
+        spark, lambda: store.query_tableset_cells("q2_jobs", kids6, 8)
+    )
+    assert jobs == 0, jobs
+    probe = cells_frame(spark, "h3index", cells[:300])
+    framed, jobs = _jobs_run_by(
+        spark, lambda: store.query_tableset_cells_df("q2_jobs", probe, 6)
+    )
+    assert 0 < jobs <= QUERY_FRAME_BUILD_MAX_JOBS[auto_part], jobs
+    assert len(listed.df.collect()) == 7 * 49
+    assert sorted(r.h3index for r in framed.df.collect()) == sorted(
+        {h3c.cell_to_parent(c, 6) for c in cells[:300]}
+    )
+
+    tr = T.build_traverser(
+        store, "q2_jobs", [a, b], 8, options=T.TraversalOptions(num_connections=1)
+    )
+    for _ in range(2):
+        rows, jobs = _jobs_run_by(spark, lambda: next(tr).contained_data.df.collect())
+        assert len(rows) == 49
+        assert 0 < jobs <= TRAVERSER_STEP_MAX_JOBS, jobs
+
+
 def test_null_partition_value_merges_across_inserts(spark, tmp_path):
     """A NULL in a ``partition_by`` column is stored in Spark's default
     partition directory and read back as NULL. Matching touched

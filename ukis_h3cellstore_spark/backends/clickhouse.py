@@ -645,14 +645,12 @@ class ClickHouseJdbcBackend:
         — and the union is uncompacted IN-PLAN to ``h3_resolution``
         (per-part staged offset expansion; each contributing table
         holds exactly one resolution, so no res-dispatch filters) and
-        restricted to the requested cell set (broadcast-hinted only
-        under ``query.BROADCAST_MAX_CELLS``, like the local store).
+        restricted to the requested cell set by the local store's
+        cell-predicate rule (``query.cells_probe``).
         The reference runs the same two steps client-side after its
         gRPC fetch (``mod.rs:459-477`` uncompact-subset); here both
         are Spark plan nodes, so they distribute."""
         self._require_driver()
-        from pyspark.sql import functions as F
-
         from ukis_h3cellstore_spark import query as build_query
         from ukis_h3cellstore_spark.h3 import cells as h3c
         from ukis_h3cellstore_spark.h3 import expressions as hx
@@ -690,13 +688,10 @@ class ClickHouseJdbcBackend:
         for p in parts[1:]:
             df = df.unionByName(p)
         if do_uncompact:
-            cells_at_res = h3c.change_resolution(cells, h3_resolution)
-            restrict = build_query.cells_frame(
-                self.spark, h3name, cells_at_res
-            ).distinct()
-            if len(cells_at_res) <= build_query.BROADCAST_MAX_CELLS:
-                restrict = F.broadcast(restrict)
-            df = df.join(restrict, on=h3name, how="leftsemi")
+            probe = build_query.cells_probe(
+                self.spark, h3name, h3c.change_resolution(cells, h3_resolution)
+            )
+            df = build_query.cells_predicate(df, h3name, probe)
         return df
 
     def read_tableset_template(

@@ -372,8 +372,3 @@ def uncompact_df(
             restrict = F.broadcast(restrict)
         out = out.join(restrict, on=h3index_column, how="leftsemi")
     return out
-
-
-def compact_cells_local(cells: list[int]) -> list[int]:
-    """Driver-side exact compaction (delegates to the pure-Python core)."""
-    return h3c.compact_cells(cells)

@@ -123,10 +123,6 @@ def _hash64(col) -> "F.Column":
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _duck_hash64(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
 def _synth_col(key: str, res: int) -> "F.Column":
     """Synthetic H3 cell from an integer key — Spark side, via the
     spark-dialect SQL fragment (stays JVM-native)."""
@@ -736,8 +732,8 @@ GROUP BY 1
 
 
 def q_pipeline_query_cells_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2 through the DATAFRAME probe API (store.query_tableset_cells_df
-    + query.normalize_cells_df): same insert as pipeline_sum_rollup,
+    """Q2 through the DATAFRAME probe API (store.query_tableset_cells_df,
+    a frame-backed cell set): same insert as pipeline_sum_rollup,
     but the res-4 query cell set is handed over as a Spark frame — the
     planet-scale AOI path where the cell set never exists as a driver
     list (per-table normalization is parent bit arithmetic / offset

@@ -287,11 +287,6 @@ def hex2d_to_ijk(x: float, y: float) -> tuple[int, int, int]:
     return ijk_normalize(i, j, k)
 
 
-def ijk_distance(a: tuple[int, int, int], b: tuple[int, int, int]) -> int:
-    di, dj, dk = ijk_normalize(a[0] - b[0], a[1] - b[1], a[2] - b[2])
-    return max(di, dj, dk)
-
-
 # ------------------------------------------------------ spherical math
 
 

@@ -85,11 +85,3 @@ def synth_cell(key: str, res: int, dialect: str) -> str:
         digit = f"({_idiv(key, 7 ** (i - 1), dialect)} % 7)"
         parts.append(_shl(digit, 3 * (15 - i), dialect))
     return "(" + " | ".join(parts) + ")"
-
-
-def synth_latlng(key: str, which: str) -> str:
-    """Deterministic pseudo lat/lng from an integer key (same formula in
-    both dialects; pure arithmetic, no trig)."""
-    if which == "lat":
-        return f"(({key} * 37 % 1800) / 10.0 - 90.0)"
-    return f"(({key} * 73 % 3600) / 10.0 - 180.0)"

@@ -15,15 +15,18 @@ select.rs``. Two query flavors:
   ClickHouse dialect are provided by
   :func:`ukis_h3cellstore_spark.functions.register_h3_sql_functions`.
 
-Cell predicates are pushed as IN-literal lists for small sets (so
-Catalyst folds them into parquet filters / partition pruning) and as
-broadcast semi-joins beyond — the scale-safe replacement for the
+The store's one Q2 pipeline (``CellStore._query_cells``) builds every
+cell predicate through :func:`cells_probe` — the per-table predicate,
+the ``<[h3indexes]>`` substitution and the final restrict alike: up to
+``MAX_INLIST_CELLS`` driver-known cells become IN-literals (so Catalyst
+folds them into parquet filters); anything else, including every
+frame-backed set, becomes a semi-join, broadcast-hinted only under
+``BROADCAST_MAX_CELLS`` — the scale-safe replacement for the
 reference's always-literal SQL (SURVEY §7.2.9).
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -105,140 +108,71 @@ def cells_frame(spark: SparkSession, name: str, cells) -> DataFrame:
     )
 
 
-def cells_predicate(
-    spark: SparkSession, df: DataFrame, h3name: str, cells: list[int]
-) -> DataFrame:
-    """P2/J1 cell-membership semi-join, scale-adaptive."""
-    if len(cells) <= MAX_INLIST_CELLS:
-        return df.filter(F.col(h3name).isin(cells))
-    return df.join(
-        F.broadcast(cells_frame(spark, h3name, cells)), on=h3name, how="leftsemi"
-    )
+def cells_probe(
+    spark: SparkSession, h3name: str, cells, bound: int | None = None
+) -> list[int] | DataFrame:
+    """The one cell-predicate rule of the read path (P2/J1): a driver
+    list of at most ``MAX_INLIST_CELLS`` cells stays a literal list
+    (``IN`` — Catalyst folds it into parquet filters); anything else
+    becomes a semi-join side, broadcast-hinted only when its size
+    bound is at most ``BROADCAST_MAX_CELLS``. A list's bound is its
+    length; a frame's is the caller's arithmetic bound (``None``:
+    unknown, so no hint — the caller that cannot bound the set may be
+    handing over a continent)."""
+    if not isinstance(cells, DataFrame):
+        if len(cells) <= MAX_INLIST_CELLS:
+            return list(cells)
+        bound = len(cells)
+        cells = cells_frame(spark, h3name, cells)
+    if bound is not None and bound <= BROADCAST_MAX_CELLS:
+        cells = F.broadcast(cells)
+    return cells
 
 
-def normalize_cells_df(
-    spark: SparkSession, cells_df: DataFrame, h3name: str,
-    from_res: int, to_res: int,
-) -> DataFrame:
-    """Cell-set normalization as a PLAN — the DataFrame twin of
-    ``h3.cells.change_resolution`` for a uniform-resolution set:
-    parents via the index bit arithmetic + distinct for coarser
-    targets, child expansion via staged broadcast offset cross-joins
-    for finer (<= 7^MAX_OFFSET_DIFF rows per broadcast; invalid
-    pentagon descendants filtered per stage), identity-distinct
-    otherwise. All JVM expressions; the input set is deduplicated
-    BEFORE a child expansion (children of distinct parents are
-    distinct, so no post-expansion shuffle)."""
-    from ukis_h3cellstore_spark.h3 import expressions as hx
-
-    col = F.col(h3name)
-    if to_res == from_res:
-        return cells_df.select(col.alias(h3name)).distinct()
-    if to_res < from_res:
-        return cells_df.select(
-            hx.h3_to_parent(col, to_res).alias(h3name)
-        ).distinct()
-    return hx.h3_expand_to_children(
-        cells_df.select(col.alias(h3name)).distinct(),
-        h3name,
-        from_res,
-        to_res,
-        filter_invalid=True,
-    )
-
-
-def build_table_query_df(
-    spark: SparkSession,
-    df: DataFrame,
-    h3name: str,
-    table_cells_df: DataFrame,
-    query: TableSetQuery | None,
-    table_columns: list[str],
-    n_cells: int | None = None,
-) -> DataFrame:
-    """:func:`build_table_query` with the probe side as a DataFrame —
-    the cell predicate is a semi-join (auto mode) or an IN-subquery
-    over a temp view (templated mode); the cell set never exists as a
-    driver list.
-
-    ``n_cells``: upper bound on the probe frame's row count, when the
-    caller knows it (the store does, arithmetically: stats n · 7^diff).
-    The broadcast hint is applied ONLY below BROADCAST_MAX_CELLS —
-    a res-8 continent AOI is tens of millions of cells, and a forced
-    hint there overrides Spark's size threshold into a multi-GB
-    broadcast build. Unknown (None) or over-threshold sizes emit the
-    plain leftsemi and let AQE pick the physical join."""
-    if query is None or query.template is None:
-        proj = auto_projection_columns(table_columns, h3name)
-        probe = table_cells_df
-        if n_cells is not None and n_cells <= BROADCAST_MAX_CELLS:
-            probe = F.broadcast(probe)
-        return df.select(*proj).join(probe, on=h3name, how="leftsemi")
-    _VIEW_COUNTER[0] += 1
-    view = f"__h3cs_table_{_VIEW_COUNTER[0]}"
-    df.createOrReplaceTempView(view)
-    sql = query.template.replace(PLACEHOLDER_TABLE, view)
-    if PLACEHOLDER_H3INDEXES in sql:
-        cells_view = f"__h3cs_cells_{_VIEW_COUNTER[0]}"
-        table_cells_df.createOrReplaceTempView(cells_view)
-        sql = sql.replace(
-            PLACEHOLDER_H3INDEXES, f"(SELECT {h3name} FROM {cells_view})"
-        )
-    try:
-        return spark.sql(sql)
-    except Exception as e:
-        raise IOError(f"templated query failed: {e}") from e
+def cells_predicate(df: DataFrame, h3name: str, probe) -> DataFrame:
+    """Rows of ``df`` whose ``h3name`` is in a :func:`cells_probe`
+    result: a literal ``IN`` filter or a left semi-join."""
+    if isinstance(probe, DataFrame):
+        return df.join(probe, on=h3name, how="leftsemi")
+    return df.filter(F.col(h3name).isin(probe))
 
 
 def build_table_query(
     spark: SparkSession,
     df: DataFrame,
     h3name: str,
-    table_cells: list[int],
+    probe,
     query: TableSetQuery | None,
     table_columns: list[str],
 ) -> DataFrame:
-    """Build the per-table select of the Q2 pipeline.
+    """Build the per-table select of the Q2 pipeline over a
+    :func:`cells_probe` result.
 
     auto → projection + cell predicate; template → temp view +
     placeholder substitution via ``spark.sql`` (the template fully owns
     filtering, as in the reference where it replaces the generated
-    SELECT, select.rs:127-129).
+    SELECT, select.rs:127-129). ``<[h3indexes]>`` becomes the literal
+    list, or an IN-subquery over a temp view of the semi-join side —
+    big sets would otherwise inline megabytes of literals into the SQL
+    text and stall the parser.
     """
     if query is None or query.template is None:
         proj = auto_projection_columns(table_columns, h3name)
-        out = df.select(*proj)
-        return cells_predicate(spark, out, h3name, table_cells)
+        return cells_predicate(df.select(*proj), h3name, probe)
 
     _VIEW_COUNTER[0] += 1
     view = f"__h3cs_table_{_VIEW_COUNTER[0]}"
     df.createOrReplaceTempView(view)
     sql = query.template.replace(PLACEHOLDER_TABLE, view)
     if PLACEHOLDER_H3INDEXES in sql:
-        if len(table_cells) <= MAX_INLIST_CELLS:
-            literal = ",".join(str(c) for c in table_cells) or "NULL"
-            sub = f"({literal})"
-        else:
-            # big cell sets (continent AOIs through the distributed
-            # prefilter) would otherwise inline megabytes of literals
-            # into the SQL text and stall the parser; an IN-subquery
-            # over a temp view plans as the same semi-join
-            # cells_predicate uses, with identical semantics
+        if isinstance(probe, DataFrame):
             cells_view = f"__h3cs_cells_{_VIEW_COUNTER[0]}"
-            cells_frame(spark, "__cell", table_cells).createOrReplaceTempView(
-                cells_view
-            )
-            sub = f"(SELECT __cell FROM {cells_view})"
+            probe.createOrReplaceTempView(cells_view)
+            sub = f"(SELECT {h3name} FROM {cells_view})"
+        else:
+            sub = "(%s)" % ",".join(map(str, probe))
         sql = sql.replace(PLACEHOLDER_H3INDEXES, sub)
     try:
         return spark.sql(sql)
     except Exception as e:  # surface missing columns etc. (test_traversal parity)
         raise IOError(f"templated query failed: {e}") from e
-
-
-def validate_template_columns(sql_error: str) -> str:
-    """Normalize Spark's unresolved-column error into the reference's
-    'Missing columns' wording (test_traversal.py:89-103 parity)."""
-    if re.search(r"UNRESOLVED_COLUMN|cannot resolve", sql_error, re.IGNORECASE):
-        return f"Missing columns: {sql_error}"
-    return sql_error

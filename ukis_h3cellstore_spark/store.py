@@ -17,9 +17,13 @@ table, written with:
   index (O4).
 
 All pipelines are lazy DataFrame compositions — Catalyst plans the
-scans, semi-joins, unions and aggregations; there is no driver-side
-row movement anywhere (cell lists are turned into broadcast join
-sides, not IN-literal SQL, once they exceed a small threshold).
+scans, semi-joins, unions and aggregations. The driver collects only
+bounded metadata: an insert's level counts, partition touch-lists and
+upsert stats; a DataFrame probe's one stats row; and partition VALUES
+for static pruning (at most ``STATIC_PRUNE_MAX_PARTITIONS`` rows). Cell
+rows never pass through the driver. Both Q2 entry points share one
+pipeline (``_query_cells``) over a cell set that is either a driver
+list (``_ListCells``) or a frame (``_FrameCells``).
 """
 
 from __future__ import annotations
@@ -40,7 +44,7 @@ from ukis_h3cellstore_spark.frame import H3DataFrame
 from ukis_h3cellstore_spark.h3 import cells as h3c
 from ukis_h3cellstore_spark.h3 import expressions as hx
 from ukis_h3cellstore_spark import query as build_query
-from ukis_h3cellstore_spark.query import TableSetQuery, build_table_query
+from ukis_h3cellstore_spark.query import TableSetQuery
 from ukis_h3cellstore_spark.schema import (
     CompactedTableSchema,
     ResolutionMetadata,
@@ -48,10 +52,6 @@ from ukis_h3cellstore_spark.schema import (
     TableEngine,
 )
 from ukis_h3cellstore_spark.tableset import TableSet, group_tables_into_tablesets
-
-#: Cell lists up to this size are pushed down as IN-literals (prunable
-#: at plan time); larger sets become broadcast semi-joins.
-MAX_INLIST_CELLS = 4096
 
 #: Static partition pruning (literal ``h3part IN (…)`` →
 #: ``PartitionFilters`` in the scan) is used whenever the probe
@@ -122,6 +122,131 @@ def _leaf_dirs(root: str, depth: int) -> list[str]:
             if e.is_dir() and "=" in e.name
         ]
     return level
+
+
+class _ListCells:
+    """A driver-side cell list (mixed resolutions allowed; invalid
+    cells dropped). Every set derived from it is computed on the
+    driver, so building a query over it runs no Spark job."""
+
+    def __init__(self, cells):
+        self.cells = [c for c in cells if h3c.is_valid_cell(c)]
+        if not self.cells:
+            raise ValueError("empty cell list")  # select.rs:87-89 parity
+        # pentagon descendants only need the (large) validity filter
+        # when a queried cell sits on a pentagon base cell
+        self.any_pentagon = any(
+            h3c.get_base_cell(c) in h3c.PENTAGON_BASE_CELLS for c in self.cells
+        )
+        self._norm: dict[int, list[int]] = {}
+
+    def normalized(self, res: int) -> list[int]:
+        if res not in self._norm:
+            self._norm[res] = h3c.change_resolution(self.cells, res)
+        return self._norm[res]
+
+    def bound(self, res: int) -> int:
+        return len(self.normalized(res))
+
+    def partition_values(
+        self, part_res: int | None, table_res: int
+    ) -> tuple[list[int], int]:
+        # a table's partition values are the set normalized to the
+        # partition resolution, or its base cells
+        if part_res is None:
+            vals = sorted({h3c.get_base_cell(c) for c in self.cells})
+        else:
+            vals = self.normalized(part_res)
+        return vals, len(vals)
+
+
+class _FrameCells:
+    """A uniform-resolution cell frame (its first column) — the
+    planet-scale AOI read: the set never becomes a driver list. One
+    job reads its count, resolution range and pentagon presence; every
+    size after that is the arithmetic bound n·7^diff (a coarser set
+    has at most n cells, pentagon pruning only shrinks a finer one),
+    known without a count job."""
+
+    def __init__(self, spark: SparkSession, h3name: str, cells_df: DataFrame):
+        self.spark, self.h3name = spark, h3name
+        cells_df = (
+            cells_df.select(F.col(cells_df.columns[0]).alias(h3name))
+            .filter(hx.h3_is_valid_cell(F.col(h3name)))
+            .localCheckpoint(eager=False)  # feeds every table + the final restrict
+        )
+        pent = (
+            hx.h3_get_base_cell(F.col(h3name))
+            .isin(sorted(h3c.PENTAGON_BASE_CELLS))
+            .cast("int")
+        )
+        stats = cells_df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(hx.h3_get_resolution(F.col(h3name))).alias("lo"),
+            F.max(hx.h3_get_resolution(F.col(h3name))).alias("hi"),
+            F.max(pent).alias("pent"),
+        ).collect()[0]
+        if stats["n"] == 0:
+            raise ValueError("empty cell list")  # select.rs:87-89 parity
+        if stats["lo"] != stats["hi"]:
+            raise ValueError(
+                "query_tableset_cells_df requires a uniform-resolution "
+                f"cell set (found {stats['lo']}..{stats['hi']}); use "
+                "query_tableset_cells for mixed-resolution lists"
+            )
+        self.res = int(stats["lo"])
+        self.n = int(stats["n"])
+        self.any_pentagon = bool(stats["pent"])
+        self._norm: dict[int, DataFrame] = {self.res: cells_df}
+
+    def bound(self, res: int) -> int:
+        return self.n * 7 ** max(0, res - self.res)
+
+    def normalized(self, res: int) -> DataFrame:
+        """The set at ``res`` as a plan. Coarser: parents via the index
+        bit arithmetic + distinct. A continent-scale probe normalized
+        DOWN shrinks ~7^diff-fold, so each coarser set derives from the
+        closest finer one already built (ancestry is transitive) and is
+        checkpointed for reuse; asked finest-first, the full-probe
+        distinct runs once. Finer: the distinct set expanded by staged
+        broadcast offset cross-joins (invalid pentagon descendants
+        dropped), left uncached — its size is the bound, not a scan."""
+        if res not in self._norm:
+            src = min(
+                (r for r in self._norm if res < r <= self.res), default=self.res
+            )
+            cells, col = self._norm[src], F.col(self.h3name)
+            if res < self.res:
+                self._norm[res] = (
+                    cells.select(hx.h3_to_parent(col, res).alias(self.h3name))
+                    .distinct()
+                    .localCheckpoint(eager=False)
+                )
+            else:
+                self._norm[res] = hx.h3_expand_to_children(
+                    cells.distinct(), self.h3name, src, res, filter_invalid=True
+                )
+        return self._norm[res]
+
+    def partition_values(
+        self, part_res: int | None, table_res: int
+    ) -> tuple[DataFrame, int]:
+        # parents at part_res are the same for the probe and every
+        # normalization of it, so read them from the smallest set that
+        # reaches part_res: the probe or its cached coarser form, else
+        # its expansion to part_res
+        src = min(table_res, self.res)
+        if part_res is not None and part_res > src:
+            src = part_res
+        vals = (
+            self.normalized(src)
+            .select(_h3_part(F.col(self.h3name), part_res).alias("h3part"))
+            .distinct()
+        )
+        bound = _h3_part_count(part_res)
+        if part_res is not None:
+            bound = min(bound, self.bound(part_res))
+        return vals, bound
 
 
 @dataclass
@@ -1069,76 +1194,16 @@ class CellStore:
         query: TableSetQuery | None = None,
         do_uncompact: bool = True,
     ) -> H3DataFrame:
-        """The read pipeline (reference Q2, mod.rs:333-379 +
-        select.rs:73-162): per contributing table, semi-join against the
-        query cells normalized to that table's resolution; union all;
-        uncompact to the requested resolution restricted to the cells.
-        """
+        """Q2 over a driver-side cell list (reference mod.rs:333-379 +
+        select.rs:73-162); the list may mix resolutions and invalid
+        cells are dropped. See :meth:`_query_cells`."""
         if not cells:
             raise ValueError("empty cell list")  # select.rs:87-89 parity
         schema = self.get_schema(name)
-        h3name = schema.h3index_column()
-        ts = self._tableset_from_schema(name, schema)
-        metas = ts.tables_to_satisfy_query_at_resolution(h3_resolution)
-
-        cells = [c for c in cells if h3c.is_valid_cell(c)]
-        # prune tables never written: keeps both the scan union and the
-        # uncompaction expansion to the resolutions that can hold data
-        # (an empty res-0 compacted branch would otherwise cross-join a
-        # 7^res offset table for nothing)
-        metas = [
-            m
-            for m in metas
-            if os.path.isdir(self._table_path(name, m))
-        ] or metas[:1]
-        # pentagon descendants only need the (large) validity filter
-        # when a queried cell sits on a pentagon base cell
-        any_pentagon = any(
-            h3c.get_base_cell(c) in h3c.PENTAGON_BASE_CELLS for c in cells
+        cell_set = _ListCells(cells)
+        return self._query_cells(
+            name, schema, cell_set, h3_resolution, query, do_uncompact
         )
-        parts: list[DataFrame] = []
-        for meta in metas:
-            table_cells = h3c.change_resolution(cells, meta.resolution)
-            if not table_cells:
-                continue
-            tdf = self.read_table(schema, meta)
-            tdf = self._prune_partitions(schema, tdf, meta, table_cells)
-            tdf = build_table_query(
-                self.spark,
-                tdf,
-                h3name,
-                table_cells,
-                query,
-                list(schema.spark_schema().names),
-            )
-            if do_uncompact and meta.resolution < h3_resolution:
-                # each table holds exactly its own resolution, so the
-                # expansion happens per table — single scan, no
-                # res-dispatch filters over the union; staged so no
-                # offsets broadcast exceeds 7^MAX_OFFSET_DIFF rows
-                tdf = hx.h3_expand_to_children(
-                    tdf,
-                    h3name,
-                    meta.resolution,
-                    h3_resolution,
-                    filter_invalid=any_pentagon,
-                )
-            parts.append(tdf)
-        if not parts:
-            raise ValueError("no tables satisfy the query")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-
-        if do_uncompact:
-            cells_at_res = h3c.change_resolution(cells, h3_resolution)
-            cells_df = build_query.cells_frame(
-                self.spark, h3name, cells_at_res
-            ).distinct()
-            if len(cells_at_res) <= build_query.BROADCAST_MAX_CELLS:
-                cells_df = F.broadcast(cells_df)
-            out = out.join(cells_df, on=h3name, how="leftsemi")
-        return H3DataFrame(out, h3name)
 
     def query_tableset_cells_df(
         self,
@@ -1152,275 +1217,146 @@ class CellStore:
         AOI read: the cell set (e.g. ``geo.geometry_to_cells_df``
         output) never materializes as a driver list. Semantics match
         :meth:`query_tableset_cells` on the same set exactly
-        (gate-verified); the differences are purely physical:
-
-        - one validation job reads (count, min/max resolution,
-          pentagon presence) — a UNIFORM resolution is required
-          (mixed-resolution sets stay on the list API);
-        - per contributing table the set normalizes IN-PLAN
-          (``query.normalize_cells_df``: parent bit arithmetic or
-          staged broadcast offset expansion) and probes via semi-join —
-          broadcast-hinted ONLY when the arithmetic size bound
-          (n·7^diff) is under ``query.BROADCAST_MAX_CELLS``, else left
-          to AQE (a 76M-cell res-8 continent AOI must shuffle);
-        - partition pruning is sized on the DISTINCT-partition-value
-          bound (≤122 basecell / 2+120·7^part_res, further capped by
-          the probe arithmetic) — under
-          ``STATIC_PRUNE_MAX_PARTITIONS`` it collects the values (a
-          partition-count-sized collect) into a literal IN predicate
-          so the scan gets static ``PartitionFilters``; a huge bound
-          first checks the ACTUAL count with one bounded job, and
-          only then falls back to an in-plan semi-join.
-
-        The input frame's first column is taken as the cell column."""
+        (gate-verified); the differences are purely physical: one
+        validation job reads (count, min/max resolution, pentagon
+        presence) — a UNIFORM resolution is required (mixed-resolution
+        sets stay on the list API) — and each table normalizes the set
+        in-plan (see ``_FrameCells``). The input frame's first column
+        is taken as the cell column."""
         schema = self.get_schema(name)
+        cell_set = _FrameCells(self.spark, schema.h3index_column(), cells_df)
+        return self._query_cells(
+            name, schema, cell_set, h3_resolution, query, do_uncompact
+        )
+
+    def _query_cells(
+        self,
+        name: str,
+        schema: CompactedTableSchema,
+        cells: _ListCells | _FrameCells,
+        h3_resolution: int,
+        query: TableSetQuery | None,
+        do_uncompact: bool,
+    ) -> H3DataFrame:
+        """The read pipeline (reference Q2, mod.rs:333-379 +
+        select.rs:73-162): per contributing table, prune partitions and
+        select (auto or template) with the cells normalized to that
+        table's resolution; uncompact each table to the requested
+        resolution; union all; restrict to the cells there. Every cell
+        predicate follows ``query.cells_probe``."""
         h3name = schema.h3index_column()
-        cells_df = (
-            cells_df.select(F.col(cells_df.columns[0]).alias(h3name))
-            .filter(hx.h3_is_valid_cell(F.col(h3name)))
-            .localCheckpoint(eager=False)  # feeds every table + the final restrict
-        )
-        pent = (
-            hx.h3_get_base_cell(F.col(h3name))
-            .isin(sorted(h3c.PENTAGON_BASE_CELLS))
-            .cast("int")
-        )
-        stats = cells_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(hx.h3_get_resolution(F.col(h3name))).alias("lo"),
-            F.max(hx.h3_get_resolution(F.col(h3name))).alias("hi"),
-            F.max(pent).alias("pent"),
-        ).collect()[0]
-        if stats["n"] == 0:
-            raise ValueError("empty cell list")  # select.rs:87-89 parity
-        if stats["lo"] != stats["hi"]:
-            raise ValueError(
-                "query_tableset_cells_df requires a uniform-resolution "
-                f"cell set (found {stats['lo']}..{stats['hi']}); use "
-                "query_tableset_cells for mixed-resolution lists"
-            )
-        cells_res = int(stats["lo"])
-        n_cells = int(stats["n"])
-        any_pentagon = bool(stats["pent"])
         ts = self._tableset_from_schema(name, schema)
         metas = ts.tables_to_satisfy_query_at_resolution(h3_resolution)
+        # prune tables never written: keeps both the scan union and the
+        # uncompaction expansion to the resolutions that can hold data
+        # (an empty res-0 compacted branch would otherwise cross-join a
+        # 7^res offset table for nothing)
         metas = [
             m for m in metas if os.path.isdir(self._table_path(name, m))
         ] or metas[:1]
-
-        def _bound(at_res: int) -> int:
-            # arithmetic upper bound on the normalized set's size: a
-            # coarser target has <= n parents, a finer one exactly
-            # n·7^diff descendants (pentagon pruning only shrinks it) —
-            # known WITHOUT a count job, so broadcast decisions cost
-            # nothing (verdict r12 "what's wrong #1")
-            diff = max(0, at_res - cells_res)
-            return n_cells * 7**diff
-
-        # ---- normalization cache. A continent-scale probe normalized
-        # DOWN shrinks ~7^diff-fold, yet the naive per-table form
-        # re-scans the full probe for every table resolution AND the
-        # final restrict — three 534M-row scan+distincts at the res-9
-        # design point. Ancestry is transitive (parent-of-parent =
-        # parent), so the full-probe distinct runs ONCE at the finest
-        # needed coarser-than-probe resolution; every coarser set
-        # derives from that (checkpointed, ~7^diff smaller) result,
-        # and repeated requests reuse the same frame.  Expansions
-        # (target finer than the probe) stay uncached in-plan
-        # cross-joins — their size is the bound, not the scan.
-        norm_cache: dict[int, DataFrame] = {}
-
-        def _normalized(to_res: int) -> DataFrame:
-            if to_res == cells_res:
-                return cells_df
-            if to_res > cells_res:
-                return build_query.normalize_cells_df(
-                    self.spark, cells_df, h3name, cells_res, to_res
-                )
-            if to_res not in norm_cache:
-                finer = [r for r in norm_cache if r > to_res]
-                src_res = min(finer) if finer else cells_res
-                src = norm_cache.get(src_res, cells_df)
-                norm_cache[to_res] = build_query.normalize_cells_df(
-                    self.spark, src, h3name, src_res, to_res
-                ).localCheckpoint(eager=False)
-            return norm_cache[to_res]
-
-        # materialize finest-first so coarser sets derive from the
+        # normalize finest-first so coarser sets derive from the
         # smallest possible parent set
         needed = {m.resolution for m in metas}
         if do_uncompact:
             needed.add(h3_resolution)
-        for r in sorted((r for r in needed if r < cells_res), reverse=True):
-            _normalized(r)
+        for r in sorted(needed, reverse=True):
+            cells.normalized(r)
 
+        def probe(res: int):
+            return build_query.cells_probe(
+                self.spark, h3name, cells.normalized(res), cells.bound(res)
+            )
+
+        columns = list(schema.spark_schema().names)
         parts: list[DataFrame] = []
         for meta in metas:
-            table_cells = _normalized(meta.resolution)
-            tdf = self.read_table(schema, meta)
-            # prune from whichever probe description is SMALLER: the
-            # normalized (cached) set when the table is coarser than
-            # the probe, else the raw probe — partition parents are
-            # identical either way (ancestor transitivity)
-            if meta.resolution < cells_res:
-                prune_probe, prune_res, prune_n = (
-                    table_cells,
-                    meta.resolution,
-                    _bound(meta.resolution),
-                )
-            else:
-                prune_probe, prune_res, prune_n = cells_df, cells_res, n_cells
-            tdf = self._prune_partitions_df(
-                schema,
-                tdf,
-                meta,
-                table_cells,
-                n_cells=_bound(meta.resolution),
-                probe_df=prune_probe,
-                probe_res=prune_res,
-                n_probe=prune_n,
+            tdf = self._prune_partitions(
+                schema, self.read_table(schema, meta), meta, cells
             )
-            tdf = build_query.build_table_query_df(
-                self.spark,
-                tdf,
-                h3name,
-                table_cells,
-                query,
-                list(schema.spark_schema().names),
-                n_cells=_bound(meta.resolution),
+            tdf = build_query.build_table_query(
+                self.spark, tdf, h3name, probe(meta.resolution), query, columns
             )
             if do_uncompact and meta.resolution < h3_resolution:
+                # each table holds exactly its own resolution, so the
+                # expansion happens per table — single scan, no
+                # res-dispatch filters over the union; staged so no
+                # offsets broadcast exceeds 7^MAX_OFFSET_DIFF rows
                 tdf = hx.h3_expand_to_children(
                     tdf,
                     h3name,
                     meta.resolution,
                     h3_resolution,
-                    filter_invalid=any_pentagon,
+                    filter_invalid=cells.any_pentagon,
                 )
             parts.append(tdf)
-        if not parts:
-            raise ValueError("no tables satisfy the query")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        out = functools.reduce(DataFrame.unionByName, parts)
         if do_uncompact:
-            target = _normalized(h3_resolution)
-            if _bound(h3_resolution) <= build_query.BROADCAST_MAX_CELLS:
-                target = F.broadcast(target)
-            out = out.join(target, on=h3name, how="leftsemi")
+            out = build_query.cells_predicate(out, h3name, probe(h3_resolution))
         return H3DataFrame(out, h3name)
 
-    def _prune_partitions_df(
+    def _prune_partitions(
         self,
         schema: CompactedTableSchema,
         df: DataFrame,
         meta: ResolutionMetadata,
-        table_cells_df: DataFrame,
-        n_cells: int | None = None,
-        probe_df: DataFrame | None = None,
-        probe_res: int | None = None,
-        n_probe: int | None = None,
+        cells: _ListCells | _FrameCells,
     ) -> DataFrame:
-        """:meth:`_prune_partitions` with the cell set as a frame.
+        """Push the query's H3 partition values into the scan so Spark
+        prunes parquet partitions (O3; the reference's ClickHouse part
+        pruning, schema/mod.rs:306-350). Tables in "global" layout mode
+        hold a single constant partition — nothing to prune (and a
+        basecell IN-list would wrongly exclude it).
 
-        The strategy decision is sized on the number of DISTINCT
-        PARTITION VALUES the probe can touch — never on the cell
-        count.  That bound is arithmetic: ≤122 for basecell
-        partitioning, else min(probe_count · 7^max(0, part_res −
-        probe_res), 2 + 120·7^part_res) — so a 76M-cell res-8
-        continent AOI over a res-3-partitioned table is known to touch
-        ≤41,162 partitions WITHOUT running a job.  Under
-        ``STATIC_PRUNE_MAX_PARTITIONS`` the distinct values are
-        collected (a partition-count-sized collect) and emitted as a
-        literal IN predicate, which Spark turns into static
-        ``PartitionFilters`` on the scan — file-level pruning that
-        does not depend on dynamic partition pruning firing (DPP's
-        ``reuseBroadcastOnly`` + selective-filter heuristics do NOT
-        trigger for a derived, checkpoint-truncated probe side, so the
-        leftsemi fallback scans every partition; matching the
-        reference's ClickHouse part pruning, schema/mod.rs:306-350,
-        requires the static form).  When the arithmetic bound is
-        huge, one bounded job (``limit(max+1).collect()`` over the
-        distinct frame — driver cost capped at max+1 rows) checks the
-        ACTUAL count: a sane layout still gets static pruning, and
-        only a probe that genuinely touches >max partitions falls back
-        to the in-plan leftsemi join (broadcast-hinted only under
-        ``query.BROADCAST_MAX_CELLS``).
-
-        ``probe_df``/``probe_res``/``n_probe`` describe the RAW
-        uniform-resolution probe; when the partition resolution is at
-        or below ``probe_res`` the distinct parents are computed from
-        it directly (a cover-sized frame) instead of the normalized —
-        possibly child-expanded, cell-count-sized — ``table_cells_df``.
-        ``n_cells`` (the bound at ``meta.resolution``) is a fallback
-        bound used only when the probe description is absent."""
+        Partition values known on the driver — a list's, or a frame's
+        bounded collect — become a single-parse literal ``h3part IN
+        (…)``, which Spark turns into static ``PartitionFilters``:
+        file-level pruning that does not depend on dynamic partition
+        pruning firing (DPP's ``reuseBroadcastOnly`` + selective-filter
+        heuristics do NOT trigger for a derived, checkpoint-truncated
+        probe side). The decision is sized on the number of DISTINCT
+        PARTITION VALUES, never on the cell count: exact for a list;
+        for a frame ≤122 basecell values, else min(n·7^max(0, part_res
+        − res), 2 + 120·7^part_res) — so a 76M-cell res-8 continent AOI
+        over a res-3-partitioned table is known to touch ≤41,162
+        partitions without a job. Above ``STATIC_PRUNE_MAX_PARTITIONS``
+        the values are first intersected with the table's physical
+        partition listing (the filter only ever keeps partitions that
+        exist, so the result is bounded by the layout, not the probe);
+        a frame without a usable listing checks its ACTUAL count with
+        one bounded ``limit(max+1)`` collect. Only a set that genuinely
+        touches more partitions falls back to an in-plan semi-join on
+        ``h3part``."""
         if self._table_mode(schema, meta) == "global":
             return df
-        h3name = schema.h3index_column()
-        part_res = _h3_part_res(schema, meta.resolution)
-        pv_bound = _h3_part_count(part_res)
-        if part_res is not None:
-            if n_probe is not None and probe_res is not None:
-                pv_bound = min(
-                    pv_bound, n_probe * 7 ** max(0, part_res - probe_res)
-                )
-            elif n_cells is not None:
-                # parents at a coarser resolution only collapse
-                pv_bound = min(pv_bound, n_cells)
-        if probe_df is not None and (
-            part_res is None
-            or (probe_res is not None and part_res <= probe_res)
-        ):
-            # ancestors at part_res ≤ probe_res are identical for the
-            # raw probe and its normalized form — use the smaller frame
-            src = probe_df
-        else:
-            src = table_cells_df
-        vals_df = src.select(
-            _h3_part(F.col(h3name), part_res).alias("h3part")
-        ).distinct()
-        values: list[int] | None = None
-        if pv_bound <= STATIC_PRUNE_MAX_PARTITIONS:
-            values = [r["h3part"] for r in vals_df.collect()]
-        else:
+        cap = STATIC_PRUNE_MAX_PARTITIONS
+        values, bound = cells.partition_values(
+            _h3_part_res(schema, meta.resolution), meta.resolution
+        )
+        if bound > cap:
             physical = self._physical_partition_values(schema.name, meta)
-            if (
-                physical is not None
-                and len(physical) <= STATIC_PRUNE_MAX_PARTITIONS
-            ):
-                # the filter only ever keeps partitions that physically
-                # exist, so intersect the probe's parents with the
-                # table's directory listing: ONE job whose output is
-                # bounded by the PHYSICAL partition count regardless of
-                # the probe's size — static pruning stays reachable for
-                # any table with a sane layout even when the probe's
-                # arithmetic bound is planetary
-                phys_df = self.spark.createDataFrame(
-                    [(v,) for v in sorted(physical)], "h3part long"
-                )
-                values = [
-                    r["h3part"]
-                    for r in vals_df.join(
-                        F.broadcast(phys_df), on="h3part", how="leftsemi"
-                    ).collect()
-                ]
-            else:
-                sample = vals_df.limit(STATIC_PRUNE_MAX_PARTITIONS + 1).collect()
-                if len(sample) <= STATIC_PRUNE_MAX_PARTITIONS:
-                    values = [r["h3part"] for r in sample]
-        if values is not None:
-            if not values:
-                return df.filter(F.lit(False))
-            # a single-parse SQL IN beats Column.isin here: isin builds
-            # one py4j literal per value (~25 s at 50k values, measured)
-            # while the parsed form lands in the same INSET/
-            # PartitionFilters at ~0.03 s build cost
-            return df.filter(
-                F.expr("h3part IN (%s)" % ",".join(map(str, sorted(values))))
-            )
-        if pv_bound <= build_query.BROADCAST_MAX_CELLS:
-            vals_df = F.broadcast(vals_df)
-        return df.join(vals_df, on="h3part", how="leftsemi")
+            if physical is not None and len(physical) <= cap:
+                if isinstance(values, DataFrame):
+                    keep = build_query.cells_probe(
+                        self.spark, "h3part", sorted(physical)
+                    )
+                    values = build_query.cells_predicate(values, "h3part", keep)
+                else:
+                    values = sorted(set(values).intersection(physical))
+                bound = len(physical)
+        if isinstance(values, DataFrame):
+            rows = (values if bound <= cap else values.limit(cap + 1)).collect()
+            if len(rows) <= cap:
+                values = sorted(r["h3part"] for r in rows)
+        if isinstance(values, DataFrame) or len(values) > cap:
+            probe = build_query.cells_probe(self.spark, "h3part", values, bound)
+            return build_query.cells_predicate(df, "h3part", probe)
+        if not values:
+            return df.filter(F.lit(False))
+        # a single-parse SQL IN beats Column.isin here: isin builds one
+        # py4j literal per value (~25 s at 50k values, measured) while
+        # the parsed form lands in the same INSET/PartitionFilters at
+        # ~0.03 s build cost
+        return df.filter(F.expr("h3part IN (%s)" % ",".join(map(str, values))))
 
     def _physical_partition_values(
         self, tableset_name: str, meta: ResolutionMetadata
@@ -1451,36 +1387,6 @@ class CellStore:
             sorted(m.resolution for m in metas if not m.is_compacted),
             sorted(m.resolution for m in metas if m.is_compacted),
         )
-
-    def _prune_partitions(
-        self,
-        schema: CompactedTableSchema,
-        df: DataFrame,
-        meta: ResolutionMetadata,
-        cells: list[int],
-    ) -> DataFrame:
-        """Push the query's H3 partition values into the scan so Spark
-        prunes parquet partitions (O3): derive the distinct partition
-        values of the requested cells. Tables in "global" layout mode
-        hold a single constant partition — nothing to prune (and a
-        basecell IN-list would wrongly exclude it)."""
-        if self._table_mode(schema, meta) == "global":
-            return df
-        part_res = _h3_part_res(schema, meta.resolution)
-        if part_res is None:
-            values = sorted({h3c.get_base_cell(c) for c in cells})
-        else:
-            values = sorted({h3c.cell_to_parent(c, part_res) for c in cells})
-        if len(values) <= MAX_INLIST_CELLS:
-            df = df.filter(F.col("h3part").isin(values))
-        elif len(values) <= STATIC_PRUNE_MAX_PARTITIONS:
-            # used to skip pruning entirely above MAX_INLIST_CELLS — a
-            # full scan; the single-parse SQL IN makes wide static
-            # PartitionFilters cheap (see _prune_partitions_df)
-            df = df.filter(
-                F.expr("h3part IN (%s)" % ",".join(map(str, values)))
-            )
-        return df
 
     # ----------------------------------------------------------------- Q4 stats
 
