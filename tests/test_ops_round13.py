@@ -32,9 +32,8 @@ def _optimized(df) -> str:
 
 def _has_broadcast_hint(df) -> bool:
     """True if any LeftSemi join in the optimized plan carries a
-    broadcast hint. The offsets cross-joins of the staged expansion
-    keep their hints by design (bounded at 7^MAX_OFFSET_DIFF rows) —
-    only the probe-side SEMI-join hint is size-conditioned."""
+    broadcast hint — only the probe-side SEMI-join hint is
+    size-conditioned (the staged expansion joins nothing)."""
     return any(
         "LeftSemi" in line and "strategy=broadcast" in line
         for line in _optimized(df).splitlines()

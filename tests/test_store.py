@@ -4,6 +4,8 @@ live-ClickHouse parts (the Parquet warehouse replaces the server)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -597,24 +599,31 @@ def test_overlapping_insert_jobs_ceiling(spark, tmp_path):
 #: asked at res 6: its stats job, the checkpointed res-4 normalization
 #: and, in the declared layout, one partition-value collect per table
 #: — the same counts as before the list and frame APIs shared one
-#: pipeline.
-QUERY_FRAME_BUILD_MAX_JOBS = {True: 3, False: 5}  # by auto_partitioning
-#: One Traverser step at res 8 (the fetch, its emptiness check and the
-#: consumer's collect): 6 before the final restrict of a driver-known
-#: set became a literal IN instead of a broadcast semi-join.
-TRAVERSER_STEP_MAX_JOBS = 2
+#: pipeline. Keyed by (auto_partitioning, compacted fixture); the
+#: compacted fixture's query asks at res 8 over its two compacted
+#: tables (measured: 4 and 8, the same before uncompaction moved
+#: in-plan).
+QUERY_FRAME_BUILD_MAX_JOBS = {
+    (True, False): 3, (False, False): 5, (True, True): 4, (False, True): 8,
+}
+#: One Traverser step at res 8 (the fetch and the consumer's collect):
+#: the step's query executes once, as one job, and the collect reads
+#: the driver-local frame with none. 6 before the final restrict of a
+#: driver-known set became a literal IN, then 2 while the fetch's
+#: emptiness check and the collect each executed the plan; on the
+#: compacted fixture 6, while each execution also ran one broadcast job
+#: per uncompacted table.
+TRAVERSER_STEP_MAX_JOBS = 1
 
 
 def _jobs_run_by(spark, action):
     """Run ``action``; return its result and the number of Spark jobs
-    it ran, read from the status tracker: this thread's jobs under a job
-    group set around the call, plus new jobs outside any group (the
-    Traverser fetches on a pool thread, which carries none)."""
+    it ran under a job group set around the call, read from the status
+    tracker. A Traverser's prefetch thread inherits the group, so its
+    fetch jobs count too."""
     import uuid
 
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
     group = f"q2-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "jobs ceiling")
     try:
@@ -622,16 +631,37 @@ def _jobs_run_by(spark, action):
     finally:
         sc.setJobGroup("", "")
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store up to date
-    jobs = set(tracker.getJobIdsForGroup(group))
-    jobs |= set(tracker.getJobIdsForGroup()) - before
-    return out, len(jobs)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _q2_jobs_cls(cell, compacted):
+    """Class of a res-8 cell in the ``q2_jobs`` fixture. Alternating
+    classes never compact; the compacted variant is uniform per res-6
+    cell for digits 0-3 (compacted res-6 rows) and per res-7 cell
+    otherwise (compacted res-7 rows)."""
+    if not compacted:
+        return h3c.get_digit(cell, 8) % 2
+    d6 = h3c.get_digit(cell, 6)
+    return d6 if d6 < 4 else 10 + h3c.get_digit(cell, 7)
 
 
 @pytest.mark.parametrize("auto_part", [True, False])
 def test_query_jobs_ceiling(spark, tmp_path, auto_part):
     """Job budget of the Q2 read path: a list-backed query builds with
     no Spark job, a frame-backed one with its stats and normalization
-    jobs only, and a traversal step runs a bounded number."""
+    jobs only, and a traversal step runs one."""
+    _check_query_jobs(spark, tmp_path, auto_part, compacted=False)
+
+
+@pytest.mark.parametrize("auto_part", [True, False])
+def test_query_jobs_ceiling_compacted(spark, tmp_path, auto_part):
+    """The same budget over a pyramid with compacted res-6 and res-7
+    rows, whose reads uncompact in-plan: no broadcast nested-loop join,
+    and still one job per traversal step."""
+    _check_query_jobs(spark, tmp_path, auto_part, compacted=True)
+
+
+def _check_query_jobs(spark, tmp_path, auto_part, compacted):
     from ukis_h3cellstore_spark import traversal as T
     from ukis_h3cellstore_spark.query import cells_frame
 
@@ -648,23 +678,38 @@ def test_query_jobs_ceiling(spark, tmp_path, auto_part):
     store.insert_h3dataframe_into_tableset(
         schema,
         spark.createDataFrame(
-            [(c, h3c.get_digit(c, 8) % 2) for c in cells], "h3index long, cls int"
+            [(c, _q2_jobs_cls(c, compacted)) for c in cells], "h3index long, cls int"
         ),
     )
+    compacted_res = sorted(
+        m.resolution for m in schema.resolution_metadata()
+        if m.is_compacted and os.path.isdir(store._table_path("q2_jobs", m))
+    )
+    assert compacted_res == ([6, 7] if compacted else []), compacted_res
     kids6 = h3c.cell_to_children(a, 6)
 
     listed, jobs = _jobs_run_by(
         spark, lambda: store.query_tableset_cells("q2_jobs", kids6, 8)
     )
     assert jobs == 0, jobs
+    plan = listed.df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert ("Generate" in plan) == compacted
+    # the compacted pyramid has no res-6 base rows for its res-7
+    # compacted rows (the known rollup fault, ROADMAP item 1), so its
+    # frame query asks at res 8: it uncompacts both compacted tables
+    frame_res = 8 if compacted else 6
     probe = cells_frame(spark, "h3index", cells[:300])
     framed, jobs = _jobs_run_by(
-        spark, lambda: store.query_tableset_cells_df("q2_jobs", probe, 6)
+        spark, lambda: store.query_tableset_cells_df("q2_jobs", probe, frame_res)
     )
-    assert 0 < jobs <= QUERY_FRAME_BUILD_MAX_JOBS[auto_part], jobs
-    assert len(listed.df.collect()) == 7 * 49
+    assert 0 < jobs <= QUERY_FRAME_BUILD_MAX_JOBS[auto_part, compacted], jobs
+    assert sorted((r.h3index, r.cls) for r in listed.df.collect()) == sorted(
+        (c, _q2_jobs_cls(c, compacted)) for k in kids6
+        for c in h3c.cell_to_children(k, 8)
+    )
     assert sorted(r.h3index for r in framed.df.collect()) == sorted(
-        {h3c.cell_to_parent(c, 6) for c in cells[:300]}
+        {h3c.cell_to_parent(c, frame_res) for c in cells[:300]}
     )
 
     tr = T.build_traverser(

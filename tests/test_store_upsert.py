@@ -265,11 +265,12 @@ def test_upsert_merge_path_honors_chunk_size(spark, tmp_path):
 
 
 #: Spark jobs one upsert micro-batch into an existing tableset may run
-#: (measured: 8 in either layout with AQE on, 10 and 12 before the
-#: staged rewrite): the stats aggregation, one staged write merging the
-#: batch into the base table, and one staged recompute of the coarse
-#: level.
-UPSERT_MICROBATCH_MAX_JOBS = 8
+#: (measured: 7 in either layout with AQE on; 8 while the batch was
+#: persisted, whose cache build is a job of its own under AQE, and 10
+#: and 12 before the staged rewrite): the stats aggregation, one staged
+#: write merging the batch into the base table, and one staged
+#: recompute of the coarse level.
+UPSERT_MICROBATCH_MAX_JOBS = 7
 
 
 @pytest.mark.parametrize("auto_part", [True, False])

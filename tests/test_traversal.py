@@ -222,3 +222,97 @@ def test_traverse_do_uncompact_false_returns_stored_resolutions(loaded):
     )
     # stored (compacted) resolution comes back untouched
     assert res == [5]
+
+
+# ------------------------------------------- materialized step contract
+
+
+def eq_schema():
+    return (
+        CompactedTableSchemaBuilder("eq_set")
+        .h3_base_resolutions([4, 5, 6, 7])
+        .add_h3index_column()
+        .add_column("value", "Int32")
+        .add_column("tag", "String")
+        .add_column("ts", "DateTime")
+        .add_aggregated_column("cls", "UInt8", "SetNullOnConflict", nullable=True)
+        .add_aggregated_column("dens", "Float32", "RelativeToCellArea")
+        .build()
+    )
+
+
+@pytest.mark.parametrize("buffer_k", [0, 1])
+@pytest.mark.parametrize("do_uncompact", [True, False])
+def test_materialized_step_matches_lazy_query(spark, store, do_uncompact, buffer_k):
+    """A traversed cell's frame is the step's query result fetched once:
+    same rows, column names, types and nullability as the lazy
+    ``query_tableset_cells`` frame, NULLs kept, and an empty step
+    skipped. The first res-6 cell of ``region_a`` is uniform, so it is
+    stored compacted and uncompacted on read."""
+    import datetime
+
+    from ukis_h3cellstore_spark import geo
+
+    region_a = h3c.build_cell(60, [1, 2, 3, 4, 5])
+    # no data, next to a
+    region_b = min(set(geo.default_grid().grid_disk(region_a, 1)) - {region_a})
+    region_c = h3c.build_cell(10, [1, 2, 3, 4, 5])  # no data, far away
+    ts = datetime.datetime(2024, 5, 17, 13, 30, 15)
+    rows = []
+    for c in h3c.cell_to_children(region_a, 7):
+        if h3c.get_digit(c, 6) == 0:
+            rows.append((c, 7, "u", ts, 3, 1.5))
+        else:
+            d7 = h3c.get_digit(c, 7)
+            rows.append((c, d7, "m", ts, None if d7 == 2 else d7, 0.25 * d7))
+    store.insert_h3dataframe_into_tableset(
+        eq_schema(),
+        spark.createDataFrame(
+            rows,
+            "h3index long, value int, tag string, ts timestamp, cls int, dens float",
+        ),
+    )
+    trav = build_traverser(
+        store,
+        "eq_set",
+        [region_a, region_b, region_c],
+        7,
+        options=TraversalOptions(
+            max_h3indexes_fetch_count=50,
+            do_uncompact=do_uncompact,
+            buffer_k=buffer_k,
+            num_connections=1,
+        ),
+    )
+    assert trav.num_traversed_cells == 3  # traversal at res 5
+
+    def lazy(cell):
+        fetch = [cell]
+        if buffer_k:
+            fetch = sorted(set(geo.default_grid().grid_disk(cell, buffer_k)))
+        return store.query_tableset_cells(
+            "eq_set", fetch, 7, do_uncompact=do_uncompact
+        ).df
+
+    steps = list(trav)
+    assert [s.cell for s in steps] == [
+        c for c in trav.traversal_cells if not lazy(c).isEmpty()
+    ]
+    assert region_a in [s.cell for s in steps]
+    assert region_c not in [s.cell for s in steps]
+    assert (region_b in [s.cell for s in steps]) == bool(buffer_k)
+    for step in steps:
+        got, want = step.contained_data.df, lazy(step.cell)
+        assert [(f.name, f.dataType, f.nullable) for f in got.schema] == [
+            (f.name, f.dataType, f.nullable) for f in want.schema
+        ]
+        got_rows, want_rows = got.collect(), want.collect()
+        assert sorted(got_rows, key=repr) == sorted(want_rows, key=repr)
+        assert any(r.cls is None for r in got_rows)
+        assert all(r.ts == ts for r in got_rows)
+    resolutions = {
+        h3c.get_resolution(r.h3index)
+        for s in steps
+        for r in s.contained_data.df.collect()
+    }
+    assert resolutions == ({7} if do_uncompact else {6, 7})

@@ -1,12 +1,13 @@
-"""Uncompaction-offsets envelope tests (round-13 verdict item #4).
+"""Uncompaction envelope tests (round-13 verdict item #4).
 
-A single child-offset frame has 7^diff rows and is always broadcast;
-``h3_expand_to_children`` caps every broadcast at 7^MAX_OFFSET_DIFF
-rows by chaining stages, and hash-repartitions between stages so the
-7^k fan-out of a FEW coarse rows parallelizes instead of running in
-the input's original (often single) task.
+One expansion stage explodes a sequence of 7^diff child ids per row;
+``h3_expand_to_children`` caps every sequence at 7^MAX_OFFSET_DIFF ids
+by chaining stages, and hash-repartitions between stages so the 7^k
+fan-out of a FEW coarse rows parallelizes instead of running in the
+input's original (often single) task.
 
-Measured envelope (local[32], one input row):
+Measured envelope (local[32], one input row; recorded when each stage
+was a broadcast offsets cross-join):
 
 ====  ===========  ==============  ========
 diff  rows          exact count     wall (s)
@@ -24,7 +25,7 @@ arithmetic through diff 15.
 Reference behavior mirrored: ``h3_uncompact_dataframe_subset``
 (crates/ukis_h3cellstore_deckgl/... mod.rs:459-477) — uncompaction is
 client-side there and bounded by memory; here it is a distributed
-plan, so the envelope is about broadcast/bcast-NLJ sizing instead.
+plan, so the envelope is about the per-stage fan-out instead.
 """
 
 from __future__ import annotations
@@ -53,7 +54,7 @@ def test_stage_arithmetic_bounds():
         assert all(
             0 < hi - lo <= hx.MAX_OFFSET_DIFF for lo, hi in stages
         )
-        # broadcast bound: every offsets frame <= 7^MAX_OFFSET_DIFF rows
+        # sequence bound: every stage's child ids <= 7^MAX_OFFSET_DIFF
         assert all(
             7 ** (hi - lo) <= 7**hx.MAX_OFFSET_DIFF for lo, hi in stages
         )

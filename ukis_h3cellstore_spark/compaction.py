@@ -19,10 +19,10 @@ Spark-first design (scale notes):
   holding no whole uniform res-``max_res - GROUP_LEVELS`` cell never
   has.
 - ``uncompact_df`` expands mixed-resolution rows to a target
-  resolution with **staged broadcast joins against small child-offset
-  tables** (``h3_expand_to_children``: each stage's offsets frame is at
-  most 7^MAX_OFFSET_DIFF rows, so even a res-0 row under a res-10
-  target never builds a multi-GB broadcast) and pure bit arithmetic —
+  resolution **in-plan** (``h3_expand_to_children``: each row explodes
+  a sequence of child ids turned into child cells by pure bit
+  arithmetic — no join, no broadcast — staged so no sequence exceeds
+  7^MAX_OFFSET_DIFF ids even for a res-0 row under a res-10 target) —
   the Spark realization of the reference's client-side
   ``h3_uncompact_dataframe_subset`` (``mod.rs:459-477``) that scales to
   any number of rows (no driver materialization).
@@ -313,9 +313,10 @@ def uncompact_df(
     """Expand mixed-resolution rows to ``target_res`` descendants.
 
     Rows already at ``target_res`` pass through; coarser rows are
-    crossed with a broadcast child-offset table per source resolution
-    (pure bit-OR arithmetic, JVM-side). Pentagon descendants that would
-    carry a K-axis digit are filtered out with a validity bit-test.
+    expanded in-plan per source resolution (an exploded child-id
+    sequence and pure bit-OR arithmetic, JVM-side). Pentagon
+    descendants that would carry a K-axis digit are filtered out with a
+    validity bit-test.
 
     ``cells_df`` (single column named like ``h3index_column``)
     optionally restricts the result via a left-semi join — the
@@ -349,8 +350,8 @@ def uncompact_df(
 
     parts = [at_target]
     for r in sorted(res_present):
-        # staged expansion: no single offsets broadcast above
-        # 7^MAX_OFFSET_DIFF rows even for res-0 rows under a fine
+        # staged expansion: no per-row child sequence above
+        # 7^MAX_OFFSET_DIFF ids even for res-0 rows under a fine
         # target; drops K-axis children under pentagon chains per stage
         lvl = hx.h3_expand_to_children(
             coarser.filter(res_col == r),

@@ -6,8 +6,11 @@ mod.rs:366``) and the Python ``DataFrameWrapper``
 (``ukis_h3cellstorepy/frame.py:23-89``): conversion helpers to
 pandas/pyarrow are provided for API parity, but unlike the reference —
 where the dataframe is always driver-resident — the wrapped object here
-is a *lazy distributed* DataFrame; conversions collect and should only
-be used on query results that fit the driver.
+is usually a *lazy distributed* DataFrame; conversions collect and
+should only be used on query results that fit the driver. The one
+exception is a traversal step (``TraversedCell.contained_data``): its
+rows are already fetched, and the frame is a driver-local one over
+them, as in the reference.
 """
 
 from __future__ import annotations

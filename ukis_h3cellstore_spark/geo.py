@@ -417,8 +417,8 @@ def geometry_to_cells_df(
     classification (``icosa.polygon_to_cells_cover`` — perimeter-
     sized: provably-interior parents + boundary leaf cells); interior
     subtrees expand EXECUTOR-side through the JVM child-offset
-    arithmetic (``h3_cell_offsets`` cross-join + ``h3_uncompact_expr``,
-    the insert pipeline's own uncompaction idiom). A res-9 continent
+    arithmetic (``h3_expand_to_children``: an exploded child-id
+    sequence per row, the store's own uncompaction idiom). A res-9 continent
     (~0.5 B cells) is a ~50k-row driver cover and one narrow scan —
     the driver-list form (:func:`geometry_to_cells`) cannot represent
     it at all.
@@ -484,7 +484,7 @@ def geometry_to_cells_df(
     parts = [cells_frame(spark, h3name, leaves)]
     for lvl in np.unique(inter_levels):
         # staged expansion: an interior res-0/1 subtree under a res-9
-        # target would otherwise broadcast a 7^8+ offsets frame
+        # target would otherwise explode a 7^8+ id sequence per row
         at_level = inter_levels == lvl
         for pent in (False, True):
             cs = inter_cells[at_level & (is_pent if pent else ~is_pent)]

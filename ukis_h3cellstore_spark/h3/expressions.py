@@ -153,15 +153,16 @@ def h3_is_valid_cell(col: Column | str) -> Column:
     return ok
 
 
-# Uncompaction-offsets envelope: a single offsets frame has 7^diff
-# rows and is always broadcast, so diff must be capped — at diff 8
-# (compacted res-0/1 rows under a res-9 query) the frame is 5.8M rows
-# (~46 MB serialized), at diff 10 it is 282M rows (~2.3 GB, past the
-# broadcast hard cap). MAX_OFFSET_DIFF = 6 keeps every broadcast at
-# <= 7^6 = 117,649 rows (~1 MB); wider expansions go through
-# h3_expand_to_children, which chains stages of <= MAX_OFFSET_DIFF
-# steps each (the row count of the EXPANDED data is the same either
-# way — only the broadcast relation is bounded).
+# Uncompaction fan-out envelope: one expansion stage explodes every
+# parent row into a sequence of 7^diff child ids, which Spark folds into
+# one constant int array shipped with the stage's tasks, so diff must
+# be capped — at diff 8 (compacted res-0/1 rows under a res-9 query)
+# the array holds 5.8M ids (~23 MB), at diff 10 282M ids (~1.1 GB).
+# MAX_OFFSET_DIFF = 6 keeps every sequence at <= 7^6 = 117,649 ids
+# (~0.5 MB); wider expansions go through h3_expand_to_children, which
+# chains stages of <= MAX_OFFSET_DIFF steps each (the row count of the
+# EXPANDED data is the same either way — only the per-row sequence is
+# bounded).
 MAX_OFFSET_DIFF = 6
 
 
@@ -253,10 +254,13 @@ def h3_expand_to_children(
     filter_invalid: bool = False,
 ) -> DataFrame:
     """Expand ``h3name`` (uniform ``parent_res`` cells) to all
-    ``child_res`` descendants via broadcast offset cross-joins, staged
-    so no single offsets frame exceeds 7^MAX_OFFSET_DIFF rows. All
-    other columns pass through (each parent's values repeat on every
-    descendant row — the uncompaction semantics of mod.rs:459-477).
+    ``child_res`` descendants in-plan: each row explodes a sequence of
+    child ids whose base-7 digits become the child's appended digits
+    (:func:`_child_offset`), so the expansion is one narrow Generate —
+    no join, no broadcast job. Staged so no per-row sequence exceeds
+    7^MAX_OFFSET_DIFF ids. All other columns pass through (each
+    parent's values repeat on every descendant row — the uncompaction
+    semantics of mod.rs:459-477).
 
     ``filter_invalid=True`` drops K-axis pentagon descendants after
     EVERY stage — required when pentagon parents may be present, and
@@ -280,12 +284,14 @@ def h3_expand_to_children(
             df = df.repartition(
                 spark.sparkContext.defaultParallelism, F.col(h3name)
             )
-        offsets = h3_cell_offsets(spark, lo, hi)
+        child = F.explode(F.sequence(F.lit(0), F.lit(7 ** (hi - lo) - 1)))
         df = (
-            df.crossJoin(F.broadcast(offsets))
+            df.select(*cols, child.alias("__child_idx"))
             .withColumn(
                 h3name,
-                h3_uncompact_expr(F.col(h3name), lo, hi, F.col("child_offset")),
+                h3_uncompact_expr(
+                    F.col(h3name), lo, hi, _child_offset(F.col("__child_idx"), lo, hi)
+                ),
             )
             .select(*cols)
         )
@@ -298,34 +304,43 @@ def h3_expand_to_children(
     return df
 
 
+def _child_offset(idx: Column, parent_res: int, child_res: int) -> Column:
+    """The OR-mask that turns a parent cell at ``parent_res`` (with its
+    trailing 7s cleared) into its ``idx``-th child at ``child_res``
+    (0 <= idx < 7^(child_res-parent_res)): the base-7 digits of ``idx``,
+    most-significant first, become the appended digits, followed by the
+    child resolution's trailing 7s."""
+    diff = child_res - parent_res
+    offset = F.lit(c.trailing_sevens(child_res))
+    for i in range(diff):
+        # digit for resolution parent_res+1+i
+        digit = (idx / F.lit(7 ** (diff - 1 - i))).cast("long") % 7
+        offset = offset.bitwiseOR(
+            F.shiftleft(digit, 3 * (15 - (parent_res + 1 + i)))
+        )
+    return offset
+
+
 def h3_cell_offsets(spark: SparkSession, parent_res: int, child_res: int) -> DataFrame:
     """Helper table of child suffixes for JVM-side uncompaction.
 
     Returns ``7^(child_res-parent_res)`` rows with one column
-    ``child_offset``: the OR-mask that turns a parent cell at
-    ``parent_res`` (with its trailing 7s cleared) into each child at
-    ``child_res``. Used as a broadcast join side by
-    :func:`h3_uncompact_df`. Pentagon parents are handled by filtering
-    invalid children afterwards (see h3_uncompact_df). Callers that may
-    span more than MAX_OFFSET_DIFF resolutions must stage the expansion
-    (:func:`h3_expand_to_children`) instead of using one frame.
+    ``child_offset`` (:func:`_child_offset` of each child id), to be
+    crossed with a parent frame and combined by
+    :func:`h3_uncompact_expr`. Pentagon parents need their invalid
+    children filtered afterwards. :func:`h3_expand_to_children` does
+    the same expansion in-plan without a join; callers that may span
+    more than MAX_OFFSET_DIFF resolutions must use it instead of one
+    frame.
     """
-    diff = child_res - parent_res
-    n = 7**diff
-    df = spark.range(n).select(F.col("id"))
-    offset = F.lit(c.trailing_sevens(child_res))
-    for i in range(diff):
-        # digit for resolution parent_res+1+i, base-7 expansion of id,
-        # most-significant digit first
-        digit = (F.col("id") / F.lit(7 ** (diff - 1 - i))).cast("long") % 7
-        offset = offset.bitwiseOR(
-            F.shiftleft(digit, 3 * (15 - (parent_res + 1 + i)))
-        )
-    return df.select(offset.alias("child_offset"))
+    n = 7 ** (child_res - parent_res)
+    return spark.range(n).select(
+        _child_offset(F.col("id"), parent_res, child_res).alias("child_offset")
+    )
 
 
 def h3_uncompact_expr(cell: Column, parent_res: int, child_res: int, offset: Column) -> Column:
-    """Combine a parent cell with a child offset from h3_cell_offsets."""
+    """Combine a parent cell with a child offset (:func:`_child_offset`)."""
     # clear resolution field and the trailing-7 digits, then OR in the
     # child resolution + offset digits (offset includes the new trailing 7s)
     cleared = cell.bitwiseAND(F.lit(_RES_CLEAR_SIGNED)).bitwiseAND(

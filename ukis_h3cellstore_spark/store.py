@@ -208,8 +208,8 @@ class _FrameCells:
         DOWN shrinks ~7^diff-fold, so each coarser set derives from the
         closest finer one already built (ancestry is transitive) and is
         checkpointed for reuse; asked finest-first, the full-probe
-        distinct runs once. Finer: the distinct set expanded by staged
-        broadcast offset cross-joins (invalid pentagon descendants
+        distinct runs once. Finer: the distinct set expanded in-plan
+        (``h3_expand_to_children``; invalid pentagon descendants
         dropped), left uncached — its size is the bound, not a scan."""
         if res not in self._norm:
             src = min(
@@ -893,69 +893,69 @@ class CellStore:
             (r for r in schema.h3_base_resolutions if r != max_res),
             reverse=True,
         )
-        df = df.persist()
-        try:
-            # ONE aggregation job collects the batch stats AND every
-            # touched-partition value set (base + each coarse target).
-            # Partition values derive from the row itself, so the sets
-            # are exact.
-            def _parts(res: int) -> Column:
-                return F.collect_set(
-                    _h3_part(F.col(h3name), _h3_part_res(schema, res))
-                )
+        # the batch is computed exactly once, by the stats job below,
+        # with no separate cache-build job (a persisted frame costs
+        # one under AQE)
+        df = df.localCheckpoint(eager=False)
+        # ONE aggregation job collects the batch stats AND every
+        # touched-partition value set (base + each coarse target).
+        # Partition values derive from the row itself, so the sets
+        # are exact.
+        def _parts(res: int) -> Column:
+            return F.collect_set(
+                _h3_part(F.col(h3name), _h3_part_res(schema, res))
+            )
 
-            res_col = hx.h3_get_resolution(F.col(h3name))
-            aggs = [
-                F.count(F.lit(1)).alias("n"),
-                F.min(res_col).alias("lo"),
-                F.max(res_col).alias("hi"),
-                _parts(max_res).alias("p_base"),
-            ]
-            for tres in coarse_levels:
-                aggs.append(_parts(tres).alias(f"p_{tres}"))
-            stats = df.agg(*aggs).collect()[0]
-            if stats["n"] == 0:
-                return
-            # create AFTER the empty-batch early return: an all-empty
-            # stream must not materialize an empty tableset as a side
-            # effect
-            if options.create_schema and not self.tableset_exists(
-                schema.name
-            ):
-                self.create_tableset(schema)
-            if stats["lo"] != max_res or stats["hi"] != max_res:
-                raise SchemaError(
-                    "upsert rows must all be at the tableset's max "
-                    f"resolution {max_res} (found {stats['lo']}..{stats['hi']})"
-                )
-            batch_rows = stats["n"] if self.auto_partitioning else None
-            base_meta = ResolutionMetadata(max_res, False)
-            # the engine merge is an associative per-key max, so
-            # merge(old ∪ batch) is the post-merge base
-            self._write_table(
+        res_col = hx.h3_get_resolution(F.col(h3name))
+        aggs = [
+            F.count(F.lit(1)).alias("n"),
+            F.min(res_col).alias("lo"),
+            F.max(res_col).alias("hi"),
+            _parts(max_res).alias("p_base"),
+        ]
+        for tres in coarse_levels:
+            aggs.append(_parts(tres).alias(f"p_{tres}"))
+        stats = df.agg(*aggs).collect()[0]
+        if stats["n"] == 0:
+            return
+        # create AFTER the empty-batch early return: an all-empty
+        # stream must not materialize an empty tableset as a side
+        # effect
+        if options.create_schema and not self.tableset_exists(
+            schema.name
+        ):
+            self.create_tableset(schema)
+        if stats["lo"] != max_res or stats["hi"] != max_res:
+            raise SchemaError(
+                "upsert rows must all be at the tableset's max "
+                f"resolution {max_res} (found {stats['lo']}..{stats['hi']})"
+            )
+        batch_rows = stats["n"] if self.auto_partitioning else None
+        base_meta = ResolutionMetadata(max_res, False)
+        # the engine merge is an associative per-key max, so
+        # merge(old ∪ batch) is the post-merge base
+        self._write_table(
+            schema,
+            base_meta,
+            df,
+            options,
+            batch_rows,
+            merge=True,
+            dedup=options.deduplicate_after_insert,
+            touched=[(v,) for v in stats["p_base"]],
+        )
+        # always the REAL per-level value sets: _refresh_coarse_level
+        # resolves mode PER LEVEL (a coarse table can resolve
+        # 'schema' while the base is 'global')
+        for tres in coarse_levels:
+            self._refresh_coarse_level(
                 schema,
                 base_meta,
-                df,
-                options,
+                tres,
                 batch_rows,
-                merge=True,
-                dedup=options.deduplicate_after_insert,
-                touched=[(v,) for v in stats["p_base"]],
+                sorted(stats[f"p_{tres}"]),
+                options,
             )
-            # always the REAL per-level value sets: _refresh_coarse_level
-            # resolves mode PER LEVEL (a coarse table can resolve
-            # 'schema' while the base is 'global')
-            for tres in coarse_levels:
-                self._refresh_coarse_level(
-                    schema,
-                    base_meta,
-                    tres,
-                    batch_rows,
-                    sorted(stats[f"p_{tres}"]),
-                    options,
-                )
-        finally:
-            df.unpersist()
 
     def _refresh_coarse_level(
         self,
@@ -1279,8 +1279,9 @@ class CellStore:
             if do_uncompact and meta.resolution < h3_resolution:
                 # each table holds exactly its own resolution, so the
                 # expansion happens per table — single scan, no
-                # res-dispatch filters over the union; staged so no
-                # offsets broadcast exceeds 7^MAX_OFFSET_DIFF rows
+                # res-dispatch filters over the union; in-plan, staged
+                # so no per-row child sequence exceeds
+                # 7^MAX_OFFSET_DIFF ids
                 tdf = hx.h3_expand_to_children(
                     tdf,
                     h3name,

@@ -12,9 +12,13 @@ traversal.rs``) Spark-first:
   ``TraversedCell(cell, contained_data)`` — one H3DataFrame per
   traversal cell, empty results skipped (traversal.rs:452-456),
   traversal cells sorted+deduped for determinism (traversal.rs:158-160).
-  The reference fans out over ``num_connections`` gRPC workers; on
-  Spark each step IS a distributed job, so the worker pool disappears
-  — parallelism comes from executors scanning partitions.
+  As in the reference, a traversed cell holds a MATERIALIZED frame:
+  each step's query executes once, its rows come to the
+  driver as Arrow and ``contained_data`` is a driver-local frame over
+  them, so reading it runs no further Spark job. The size of a step is
+  bounded by ``max_h3indexes_fetch_count``. The reference's
+  ``num_connections`` gRPC workers become the prefetch width: up to
+  that many steps run their job concurrently ahead of the consumer.
 - **Prefilter** (P4, traversal.rs:357-393): an optional templated
   filter query run at the traversal resolution in chunks of
   ``PREFILTER_CHUNK_SIZE`` cells; only cells for which it returns rows
@@ -35,7 +39,8 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 
 from ukis_h3cellstore_spark.frame import H3DataFrame
 from ukis_h3cellstore_spark.h3 import cells as h3c
@@ -97,7 +102,9 @@ class TraversalOptions:
 
 @dataclass
 class TraversedCell:
-    """One traversal step (reference traversal.rs:395-401)."""
+    """One traversal step (reference traversal.rs:395-401).
+    ``contained_data`` is a driver-local frame over the step's rows,
+    already fetched: collecting or converting it runs no Spark job."""
 
     cell: int
     contained_data: H3DataFrame
@@ -106,9 +113,13 @@ class TraversedCell:
 @dataclass
 class Traverser:
     """Pull-based iterator over an area of interest — each ``next()``
-    runs one bounded Q2 query (reference Stream impl
-    traversal.rs:177-205; Python iterator
-    ukis_h3cellstorepy/src/clickhouse/traversal.rs:124-155)."""
+    runs one bounded Q2 query once and yields its rows as a
+    driver-local frame (reference Stream impl traversal.rs:177-205;
+    Python iterator ukis_h3cellstorepy/src/clickhouse/traversal.rs:
+    124-155). Fetches run on a prefetch thread under the Spark local
+    properties (job group, description) the caller had set when the
+    step was submitted, so a job group can cancel or attribute a
+    whole traversal."""
 
     store: object  # CellStore; duck-typed to avoid an import cycle
     tableset_name: str
@@ -148,11 +159,21 @@ class Traverser:
             query=self.query,
             do_uncompact=self.options.do_uncompact,
         )
-        # skip-empty semantics (traversal.rs:452-456). These are
-        # per-step driver actions by design — the reference is the
-        # same pull-based client iterator; for the distributed path
-        # use traverse_apply.
-        return h3df, h3df.df.isEmpty()
+        # the step's query executes once; its row count gives the
+        # skip-empty verdict (traversal.rs:452-456). Below
+        # spark.sql.execution.arrow.localRelationThreshold the frame
+        # over the fetched rows is a LocalRelation, whose collect runs
+        # no Spark job. A per-step driver fetch by design — the
+        # reference is the same pull-based client iterator; for the
+        # distributed path use traverse_apply.
+        df = h3df.df
+        table = df.toArrow()
+        if table.num_rows == 0:
+            return None
+        return H3DataFrame(
+            df.sparkSession.createDataFrame(table, schema=df.schema),
+            h3df.h3index_column_name,
+        )
 
     def __next__(self) -> TraversedCell:
         """Yields cells in dispatch order; up to ``num_connections``
@@ -173,14 +194,20 @@ class Traverser:
             ):
                 cell = self.traversal_cells[self._next_submit]
                 self._next_submit += 1
-                self._futures.append((cell, self._pool.submit(self._fetch, cell)))
+                # the fetch thread runs under the caller's Spark local
+                # properties (job group, description) and session tags
+                # as of submission
+                fetch = inheritable_thread_target(SparkSession.active())(
+                    self._fetch
+                )
+                self._futures.append((cell, self._pool.submit(fetch, cell)))
             if not self._futures:
                 self._pool.shutdown(wait=False)
                 raise StopIteration
             cell, fut = self._futures.popleft()
-            h3df, empty = fut.result()
+            h3df = fut.result()
             self._pos += 1
-            if empty:
+            if h3df is None:
                 continue
             return TraversedCell(cell, h3df)
 
@@ -196,38 +223,35 @@ def _prefilter_cells(
     resolution in chunks; keep only traversal cells present in the
     response after normalizing the (still-compacted) response cells to
     the traversal resolution (traversal.rs:384-389)."""
-    if len(traversal_cells) > PREFILTER_DISTRIBUTED_MIN_CELLS:
-        # scale path: ONE Q2 query over the whole cell set. The
-        # chunked loop below is reference parity for bounded gRPC
-        # fetches (traversal.rs:357-393), but at a continent-sized
-        # AOI it degenerates into len/50 SEQUENTIAL driver round
-        # trips (1M cells = 20k jobs); Spark's cell predicate is
-        # already a broadcast semi-join at any list size, so one
-        # query returns the same kept set and the collect stays
-        # traversal-cell-sized metadata. Result is identical to the
-        # chunked form (set-intersection semantics either way).
-        res = store.query_tableset_cells(
-            tableset_name,
-            traversal_cells,
-            traversal_resolution,
-            query=filter_query,
-            do_uncompact=False,
-        )
-        got = [r[0] for r in res.df.select(res.h3col).distinct().collect()]
-        kept = set(h3c.change_resolution(got, traversal_resolution))
-        return [c for c in traversal_cells if c in kept]
+    # scale path: above PREFILTER_DISTRIBUTED_MIN_CELLS, ONE Q2 query
+    # over the whole cell set. The chunked loop is reference parity
+    # for bounded gRPC fetches (traversal.rs:357-393), but at a
+    # continent-sized AOI it degenerates into len/50 SEQUENTIAL driver
+    # round trips (1M cells = 20k jobs); one query returns the same
+    # kept set (set-intersection semantics either way).
+    whole = len(traversal_cells) > PREFILTER_DISTRIBUTED_MIN_CELLS
+    step = len(traversal_cells) if whole else PREFILTER_CHUNK_SIZE
     kept: set[int] = set()
-    for i in range(0, len(traversal_cells), PREFILTER_CHUNK_SIZE):
-        chunk = traversal_cells[i : i + PREFILTER_CHUNK_SIZE]
+    for i in range(0, len(traversal_cells), step):
         res = store.query_tableset_cells(
             tableset_name,
-            chunk,
+            traversal_cells[i : i + step],
             traversal_resolution,
             query=filter_query,
             do_uncompact=False,
         )
-        got = [r[0] for r in res.df.select(res.h3col).distinct().collect()]
-        kept.update(h3c.change_resolution(got, traversal_resolution))
+        got = res.df.select(res.h3col)
+        if whole:
+            # a cell's rows can repeat (a time or custom partition
+            # key, a templated query): dedup in-plan so the collect
+            # stays traversal-cell-sized
+            got = got.distinct()
+        # a chunk's rows are few (<= PREFILTER_CHUNK_SIZE cells times
+        # the rows per cell), so the driver set dedups them without a
+        # shuffle
+        kept.update(
+            h3c.change_resolution([r[0] for r in got.collect()], traversal_resolution)
+        )
     return [c for c in traversal_cells if c in kept]
 
 
