@@ -7,9 +7,12 @@ Inputs mix the shapes that break set-based compaction: NULL and NaN
 values (two distinct groups, as in a Spark ``groupBy``), duplicate
 rows, a cell present together with its own descendants, pentagon
 descendants (base cell 4, six children per pentagon), blocks of one
-value, and single-partition frames. ``max_res`` 3 runs the
-basecell-grouped pandas pass alone; ``max_res`` 7 groups by the res-1
-ancestor, so complete blocks reach the JVM tail."""
+value, and single-partition frames. ``max_res`` 3 runs one band,
+grouped by the base cell; ``max_res`` 7 groups the first band by the
+res-1 ancestor, so complete blocks reach a second band; ``max_res`` 9
+and 13 put every input row (res ≤ 3) at or above the first band's
+group resolution, and at 13 the second band groups by the res-1
+ancestor, so complete blocks reach a third."""
 
 from __future__ import annotations
 
@@ -78,7 +81,7 @@ def _frame(spark, rows, single_partition):
     return df.coalesce(1) if single_partition else df.repartition(3)
 
 
-@given(rows=_rows(), max_res=st.sampled_from([3, 7]), single=st.booleans())
+@given(rows=_rows(), max_res=st.sampled_from([3, 7, 9, 13]), single=st.booleans())
 @settings(**_SETTINGS)
 def test_compact_df_equals_compact_cells_per_value_group(spark, rows, max_res, single):
     out = compaction.compact_df(_frame(spark, rows, single), "h3index", max_res=max_res)
@@ -93,7 +96,9 @@ def test_compact_df_equals_compact_cells_per_value_group(spark, rows, max_res, s
 
 
 @given(
-    rows=_rows(single_res=True), max_res=st.sampled_from([3, 7]), single=st.booleans()
+    rows=_rows(single_res=True),
+    max_res=st.sampled_from([3, 7, 9, 13]),
+    single=st.booleans(),
 )
 @settings(**_SETTINGS)
 def test_uncompact_undoes_compact_for_single_resolution(spark, rows, max_res, single):

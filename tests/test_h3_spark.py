@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from ukis_h3cellstore_spark import compaction
@@ -189,20 +190,60 @@ def test_rollup_uses_partial_aggregation(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_compact_jvm_duplicate_rows_not_falsely_promoted(spark):
+def test_compact_coarse_band_duplicate_rows_not_falsely_promoted(spark):
     """Duplicate (cell, values) rows must not fake a complete sibling
-    set in the JVM tail loop: 6 distinct children + 1 duplicate is 7
-    ROWS but not 7 siblings (no promotion); a complete set given twice
-    must promote exactly once (not be silently dropped)."""
+    set in a coarse band: at ``max_res`` 9 the first band groups by the
+    res-3 ancestor, so these res-3 rows go through the second band. 6
+    distinct children + 1 duplicate is 7 ROWS but not 7 siblings (no
+    promotion); a complete set given twice must promote exactly once
+    (not be silently dropped)."""
     parent = c.build_cell(20, [3])
     kids = c.cell_to_children(parent, 3)
 
     rows = [(k, 1) for k in kids[:6]] + [(kids[0], 1)]
     df = spark.createDataFrame(rows, "h3index long, v int")
-    out = compaction._compact_levels_jvm(df, "h3index", ["v"], 3)
+    out = compaction.compact_df(df, "h3index", max_res=9)
     assert sorted(r["h3index"] for r in out.collect()) == sorted(kids[:6])
 
     rows2 = [(k, 1) for k in kids] * 2
     df2 = spark.createDataFrame(rows2, "h3index long, v int")
-    out2 = compaction._compact_levels_jvm(df2, "h3index", ["v"], 3)
+    out2 = compaction.compact_df(df2, "h3index", max_res=9)
     assert [r["h3index"] for r in out2.collect()] == [parent]
+
+
+#: Spark jobs one ``compact_df`` call with a given ``max_res`` may run,
+#: by the number of bands its batch reaches (AQE on): two per band
+#: (the checkpoint) plus one emptiness check per band whose group
+#: resolution is above 0 (measured 3, 5, 8 on 4 cores; the
+#: window-per-level loop this replaced ran 3, 8, 12)
+COMPACT_DF_MAX_JOBS = {1: 3, 2: 5, 3: 8}
+
+
+@pytest.mark.parametrize("max_res, bands", [(8, 1), (9, 2), (13, 3)])
+def test_compact_df_jobs_ceiling(spark, max_res, bands):
+    """A uniform block of 343 ``max_res`` cells compacts inside the
+    first band. From ``max_res`` 9 on, the 7 res-1 children of base
+    cell 20 lie at or above the first band's group resolution, so they
+    reach a second band; at ``max_res`` 13 the second band groups by
+    the res-1 ancestor and they reach a third."""
+    import uuid
+
+    block = c.cell_to_children(c.build_cell(30, [1] * (max_res - 3)), max_res)
+    coarse = c.cell_to_children(c.build_cell(20, []), 1) if bands > 1 else []
+    df = spark.createDataFrame(
+        [(x, 1) for x in block] + [(x, 2) for x in coarse], "h3index long, v int"
+    )
+    sc = spark.sparkContext
+    group = f"compact-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "compact_df jobs ceiling")
+    try:
+        out = compaction.compact_df(df, "h3index", max_res=max_res)
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= COMPACT_DF_MAX_JOBS[bands], jobs
+    want = [(c.build_cell(30, [1] * (max_res - 3)), 1)]
+    if coarse:
+        want.append((c.build_cell(20, []), 2))
+    assert sorted((r.h3index, r.v) for r in out.collect()) == sorted(want)

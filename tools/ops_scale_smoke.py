@@ -687,18 +687,10 @@ def _r12_traversal_block(spark, gc) -> None:
     base6 = spark.createDataFrame(
         [(c,) for c in west], "h3index long"
     ).repartition(64)
-    offsets = hx.h3_cell_offsets(spark, 6, 7)
-    data = (
-        base6.crossJoin(_F.broadcast(offsets))
-        .select(
-            hx.h3_uncompact_expr(
-                _F.col("h3index"), 6, 7, _F.col("child_offset")
-            ).alias("h3index")
-        )
-        .filter(hx.h3_is_valid_cell(_F.col("h3index")))
-        .withColumn(
-            "value", _F.pmod(_F.xxhash64("h3index"), _F.lit(1000)).cast("int")
-        )
+    data = hx.h3_expand_to_children(
+        base6, "h3index", 6, 7, filter_invalid=True
+    ).withColumn(
+        "value", _F.pmod(_F.xxhash64("h3index"), _F.lit(1000)).cast("int")
     )
     schema = (
         CompactedTableSchemaBuilder("africa_trav")
@@ -839,18 +831,10 @@ def _r12_traversal_df_block(spark, gc) -> None:
         on=hx.h3_to_parent(_F.col("h3index"), 5) == _F.col("p"),
         how="leftsemi",
     )
-    offsets = hx.h3_cell_offsets(spark, 6, 7)
-    data = (
-        west_df.crossJoin(_F.broadcast(offsets))
-        .select(
-            hx.h3_uncompact_expr(
-                _F.col("h3index"), 6, 7, _F.col("child_offset")
-            ).alias("h3index")
-        )
-        .filter(hx.h3_is_valid_cell(_F.col("h3index")))
-        .withColumn(
-            "value", _F.pmod(_F.xxhash64("h3index"), _F.lit(1000)).cast("int")
-        )
+    data = hx.h3_expand_to_children(
+        west_df.select("h3index"), "h3index", 6, 7, filter_invalid=True
+    ).withColumn(
+        "value", _F.pmod(_F.xxhash64("h3index"), _F.lit(1000)).cast("int")
     )
     schema = (
         CompactedTableSchemaBuilder("africa_trav_df")

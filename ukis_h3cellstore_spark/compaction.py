@@ -8,16 +8,15 @@ that stores uniform regions once.
 
 Spark-first design (scale notes):
 
-- ``compact_df`` runs ONE ``applyInPandas`` pass grouped by the
-  res-``max_res - GROUP_LEVELS`` ancestor (a group holds at most 7^6
-  cells, whatever the total size). Inside a group every level is
-  vectorized numpy: parent bit arithmetic, then one sort-based count
-  per level over (parent, value code). Rows that compact all the way
-  to the group resolution, and input rows already at it or coarser,
-  go through a JVM window loop (one shuffle per level); that loop
-  runs only when such rows exist, which a single-resolution batch
-  holding no whole uniform res-``max_res - GROUP_LEVELS`` cell never
-  has.
+- ``compact_df`` runs one ``applyInPandas`` pass per band of
+  ``GROUP_LEVELS`` levels, finest band first. A band is grouped by the
+  res-``g`` ancestor (``g = max(top - GROUP_LEVELS, 0)``), so a group
+  holds at most 7^6 cells per value, whatever the total size. Inside a
+  group every level is vectorized numpy: parent bit arithmetic, then
+  one sort-based count per level over (parent, value code). Only the
+  rows at ``g`` or coarser go on to the next band, which a
+  single-resolution batch holding no whole uniform res-``g`` cell
+  never has.
 - ``uncompact_df`` expands mixed-resolution rows to a target
   resolution **in-plan** (``h3_expand_to_children``: each row explodes
   a sequence of child ids turned into child cells by pure bit
@@ -40,10 +39,10 @@ from ukis_h3cellstore_spark.h3 import cells as h3c
 from ukis_h3cellstore_spark.h3 import expressions as hx
 
 
-#: levels handled by the single grouped-pandas pass: group key is the
-#: ancestor ``max_res - GROUP_LEVELS`` (≤ 7^6 descendants per group, so
-#: a group is bounded regardless of total data size); coarser levels
-#: run the JVM loop over the residue (≤ 1/7^6 of the rows).
+#: levels handled by one grouped-pandas pass (a band): the group key is
+#: the ancestor ``GROUP_LEVELS`` above the band's finest resolution
+#: (≤ 7^6 descendants per group, so a group is bounded regardless of
+#: total data size); rows that reach that ancestor run the next band.
 GROUP_LEVELS = 6
 
 _PENTAGON_BASE_CELLS = np.array(sorted(h3c.PENTAGON_BASE_CELLS), dtype=np.int64)
@@ -53,7 +52,6 @@ def compact_df(
     df: DataFrame,
     h3index_column: str = "h3index",
     max_res: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Compact complete uniform sibling sets into parent rows.
 
@@ -64,24 +62,24 @@ def compact_df(
     (``uncompact_df(compact_df(df), r)`` reproduces ``df`` for
     single-resolution input).
 
-    Two phases:
+    One loop over bands of ``GROUP_LEVELS`` levels, finest first,
+    starting at ``top = max_res``. Each band is ONE ``applyInPandas``
+    pass that compacts every level finer than ``g = max(top -
+    GROUP_LEVELS, 0)``: a row finer than ``g`` is grouped by its
+    res-``g`` ancestor, so every complete sibling set below ``g`` lies
+    entirely inside one group (siblings share their res-``g``
+    ancestor), and sibling sets AT res ``g`` span different groups, so
+    no over-promotion. A row at res ≤ ``g`` is grouped by its own cell
+    (it only deduplicates). After the pass, rows finer than ``g`` are
+    final (their promotion failed inside their own group and can never
+    succeed elsewhere); the rows at ``g`` or coarser (≤ 1/7^GROUP_LEVELS
+    of the input) run the next band with ``top = g``.
 
-    1. ONE ``applyInPandas`` pass compacts every level finer than
-       ``P = max_res - GROUP_LEVELS``. A row finer than P is grouped by
-       its res-P ancestor: every complete sibling set below P lies
-       entirely inside one group (siblings share their res-P
-       ancestor), so per-group exact compaction is correct, and sibling
-       sets AT res P span different groups, so no over-promotion. A row
-       at res ≤ P is grouped by its own cell (it only deduplicates).
-    2. the rows at res ≤ P after the pass (≤ 1/7^GROUP_LEVELS of the
-       input) run the JVM window loop for the remaining coarse levels.
-
-    With ``persist`` (the default) the result is an eager local
-    checkpoint, so callers read it without recomputing it: the pass is
-    checkpointed (two jobs), one emptiness check over it decides
-    whether phase 2 runs, and only when it does is the union of both
-    phases checkpointed once more. Without it everything stays lazy
-    and each consumer of the result re-runs the pass.
+    Each band is an eager local checkpoint (two jobs), and one
+    emptiness check over it decides whether the next band runs; the
+    result is the union of the checkpointed bands, so callers read it
+    without recomputing it. A batch with ``max_res ≤ GROUP_LEVELS`` is
+    one band with ``g = 0`` and no emptiness check.
     """
     value_cols = [c for c in df.columns if c != h3index_column]
     h3col = F.col(h3index_column)
@@ -91,38 +89,24 @@ def compact_df(
         row = df.select(F.max(res_col).alias("r")).first()
         max_res = row["r"] if row and row["r"] is not None else 0
 
-    if max_res <= GROUP_LEVELS:
-        # the whole hierarchy fits into basecell groups → pure pandas
-        # pass, no JVM tail (sibling sets never span base cells)
-        out = _compact_grouped_pandas(
-            df, h3index_column, value_cols, hx.h3_get_base_cell(h3col)
-        )
-        return out.localCheckpoint(eager=True) if persist else out
-
-    group_res = max_res - GROUP_LEVELS
-    done = _compact_grouped_pandas(
-        df,
-        h3index_column,
-        value_cols,
-        F.when(res_col > group_res, hx.h3_to_parent(h3col, group_res)).otherwise(
-            h3col
-        ),
-    )
-    if persist:
-        # the emptiness check, the tail and the final union all read
-        # the pass; without this each of them re-runs it
-        done = done.localCheckpoint(eager=True)
-    # rows at res ≤ P go on to the JVM tail; rows still finer than P
-    # are final (their promotion failed inside their own group and can
-    # never succeed elsewhere)
-    tail_in = done.filter(res_col <= group_res)
-    if persist and tail_in.isEmpty():
-        return done
-    tail_out = _compact_levels_jvm(
-        tail_in, h3index_column, value_cols, group_res, persist
-    )
-    out = tail_out.unionByName(done.filter(res_col > group_res))
-    return out.localCheckpoint(eager=True) if persist else out
+    final: list[DataFrame] = []
+    top = max_res
+    while True:
+        g = max(top - GROUP_LEVELS, 0)
+        done = _compact_grouped_pandas(
+            df,
+            h3index_column,
+            value_cols,
+            F.when(res_col > g, hx.h3_to_parent(h3col, g)).otherwise(h3col),
+        ).localCheckpoint(eager=True)
+        df = done.filter(res_col <= g)
+        if g == 0 or df.isEmpty():
+            break
+        final.append(done.filter(res_col > g))
+        top = g
+    for band in final:
+        done = done.unionByName(band)
+    return done
 
 
 def _unique_pairs(a: np.ndarray, b: np.ndarray):
@@ -236,70 +220,6 @@ def _compact_grouped_pandas(
             for c in df.columns
         ]
     )
-
-
-def _compact_levels_jvm(
-    df: DataFrame,
-    h3index_column: str,
-    value_cols: list[str],
-    max_res: int,
-    persist: bool = True,
-) -> DataFrame:
-    """Window-aggregation compaction loop, one level per resolution
-    (used for the coarse tail where rows are few but groups span the
-    whole cell space)."""
-    from pyspark.sql import Window
-
-    out_levels: list[DataFrame] = []
-    # duplicate (cell, values) rows — in the input, or a promoted
-    # parent that was also an input row — must not fake a full sibling
-    # set: the window counts DISTINCT children, and one dedup at the
-    # end collapses the copies, as the pandas phase does per level.
-    cur = df
-    for r in range(max_res, 0, -1):
-        at_r = cur.filter(hx.h3_get_resolution(F.col(h3index_column)) == r)
-        rest = cur.filter(hx.h3_get_resolution(F.col(h3index_column)) != r)
-
-        # single-shuffle sibling detection: count children per
-        # (parent, attribute-values) group with a window — no self-join
-        with_parent = at_r.withColumn(
-            "__h3_parent", hx.h3_to_parent(F.col(h3index_column), r - 1)
-        )
-        w = Window.partitionBy("__h3_parent", *value_cols)
-        counted = with_parent.withColumn(
-            "__n", F.size(F.collect_set(h3index_column).over(w))
-        )
-        if persist:
-            # one lazy checkpoint per level: truncates lineage (the
-            # loop would otherwise build a 2^levels plan via rest ∪
-            # promoted) and shares the window shuffle between the
-            # promoted and kept branches. "Lazy" is only half true:
-            # with AQE on, the call itself runs one job per level (the
-            # adaptive plan materializes to hand over its RDD); with
-            # AQE off it runs none.
-            counted = counted.localCheckpoint(eager=False)
-        need = F.when(
-            hx.h3_is_pentagon(F.col("__h3_parent")), F.lit(6)
-        ).otherwise(F.lit(7))
-        complete = F.col("__n") == need
-        # a complete group always contains the digit-0 (center) child —
-        # emit the parent from that single row
-        last_digit = F.shiftrightunsigned(
-            F.col(h3index_column), 3 * (15 - r)
-        ).bitwiseAND(F.lit(0x7))
-        promoted = (
-            counted.filter(complete & (last_digit == 0))
-            .select(F.col("__h3_parent").alias(h3index_column), *value_cols)
-        )
-        kept = counted.filter(~complete).select(h3index_column, *value_cols)
-
-        cur = rest.unionByName(promoted.select(*rest.columns))
-        out_levels.append(kept.select(*df.columns))
-
-    result = cur
-    for lvl in out_levels:
-        result = result.unionByName(lvl)
-    return result.dropDuplicates()
 
 
 def uncompact_df(

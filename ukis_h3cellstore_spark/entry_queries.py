@@ -504,19 +504,13 @@ FROM syn GROUP BY 1
 
 def q_h3_children_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H3op/F6: uncompaction — explode res-2 cells to all res-4
-    descendants via the broadcast child-offset join (pure bit math)."""
+    descendants in-plan (``h3_expand_to_children``: an exploded
+    child-id sequence and pure bit math, no join)."""
     n = _t(spark, sf_dir, "nation").select("n_nationkey")
     parents = n.withColumn("h3index", _synth_col("n_nationkey", 2)).select(
-        F.col("h3index").alias("parent")
+        F.col("h3index").alias("parent"), F.col("h3index").alias("child")
     )
-    offsets = hx.h3_cell_offsets(spark, 2, 4)
-    out = parents.crossJoin(F.broadcast(offsets)).select(
-        "parent",
-        hx.h3_uncompact_expr(F.col("parent"), 2, 4, F.col("child_offset")).alias(
-            "child"
-        ),
-    )
-    return out
+    return hx.h3_expand_to_children(parents, "child", 2, 4)
 
 
 def _q_h3_children_explode_sql() -> str:

@@ -1063,70 +1063,15 @@ def q_streaming_cdc_upsert_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_streaming_cdc_upsert_bench(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Steady-state bench variant of ``streaming_cdc_upsert``: same
-    operator and final materialization, but the change source is
-    written ONCE per sf_dir (cached across the bench's min-of-3 runs)
-    and consumed in a SINGLE availableNow micro-batch — so the timed
-    cost is the applyInPandasWithState update + materialization, not
-    the tempdir write + 4-trigger harness the correctness gate pays
-    (that gate deliberately splits batches to prove split-invariance;
-    this one measures the state logic)."""
-    from ukis_h3cellstore_spark import streaming as st
-    from ukis_h3cellstore_spark.entry_queries import _stable_tmpdir
-
-    src = _events(spark, sf_dir).select(
-        F.col("user_id"),
-        F.col("event_id").alias("seq"),
-        (F.col("event_type") == "click").alias("is_del"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    stream_dir = _CDC_BENCH_SRC.get(sf_dir)
-    if stream_dir is None:
-        # stable per-sf_dir path: cross-process re-runs REPLACE the
-        # previous staging parquet instead of accumulating mkdtemp dirs
-        stream_dir = _stable_tmpdir("cdc_bench_src_", sf_dir)
-        src.repartition(8).write.mode("overwrite").parquet(stream_dir)
-        _CDC_BENCH_SRC[sf_dir] = stream_dir
-    stream = st.read_stream(spark, stream_dir, src.schema)
-    out = st.cdc_upsert(stream, "user_id", "seq", "is_del", "cents")
-    _SINK_COUNTER[0] += 1
-    sink = f"cdc_bench_sink_{_SINK_COUNTER[0]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
-    return (
-        spark.table(sink)
-        .groupBy("user_id")
-        .agg(
-            F.max(F.struct("last_seq", "is_deleted", "last_value")).alias("m")
-        )
-        .select(
-            "user_id",
-            F.col("m.last_seq").alias("last_seq"),
-            F.col("m.is_deleted").alias("is_deleted"),
-            F.col("m.last_value").alias("last_value"),
-        )
-    )
-
-
 def q_streaming_cdc_upsert_jvm_bench(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Steady-state bench variant of ``streaming_cdc_upsert_jvm``:
-    same operator and final materialization, but consuming the SAME
-    cached per-sf_dir staging parquet as the Python-path bench variant
-    in a single availableNow micro-batch — so the timed number is the
-    JVM state aggregation, not the staging write. The two variants
-    sharing one source makes their headline numbers directly
-    comparable (same rows, same layout)."""
+    same operator and final materialization, but the change source is
+    written ONCE per sf_dir (cached across the bench's min-of-3 runs)
+    and consumed in a SINGLE availableNow micro-batch — so the timed
+    number is the JVM state aggregation, not the staging write and the
+    multi-trigger harness the correctness gate pays."""
     from ukis_h3cellstore_spark import streaming as st
     from ukis_h3cellstore_spark.entry_queries import _stable_tmpdir
 

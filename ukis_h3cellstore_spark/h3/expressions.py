@@ -12,7 +12,7 @@ ClickHouse SQL — partitioning.rs:121-127, insert.rs:481-505).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ukis_h3cellstore_spark.h3 import cells as c
@@ -178,50 +178,29 @@ def h3_uncompact_stages(parent_res: int, child_res: int) -> list[tuple[int, int]
     return stages
 
 
-def h3_pentagon_rule(col: Column | str) -> Column:
-    """The pentagon K-axis clause of :func:`h3_is_valid_cell` ALONE:
-    False iff the cell sits on a pentagon base cell AND its first
-    nonzero digit is the deleted K axis (1).
-
-    Uncompaction output of structurally-VALID parents can violate
-    nothing else — every other clause of the full validity tree
-    (mode bits, base-cell range, digit-vs-resolution rules) is
-    preserved by OR-ing child digits into a valid parent — so the
-    expansion filter needs only this clause.  The pentagon-base
-    membership test is evaluated FIRST and whole-stage codegen
-    short-circuits ``And``, so the ~99% of rows on hexagon base cells
-    never evaluate the 15-position unrolled digit scan (the full
-    tree was measured 40× on expansion throughput: a 284M-row diff-6
-    stage ran 4.1 s unfiltered vs 164.8 s under h3_is_valid_cell)."""
-    col = _col(col)
-    res = h3_get_resolution(col)
-    pent_base = h3_get_base_cell(col).isin(*sorted(c.PENTAGON_BASE_CELLS))
-    leading_k = F.lit(False)
-    for r in range(1, c.MAX_RESOLUTION + 1):
-        digit = F.shiftrightunsigned(col, 3 * (15 - r)).bitwiseAND(F.lit(0x7))
-        if r == 1:
-            prefix_zero = F.lit(True)
-        else:
-            prefix = F.shiftrightunsigned(col, 3 * (15 - (r - 1))).bitwiseAND(
-                F.lit((1 << (3 * (r - 1))) - 1)
-            )
-            prefix_zero = prefix == 0
-        leading_k = leading_k | ((F.lit(r) <= res) & prefix_zero & (digit == 1))
-    return ~(pent_base & leading_k)
-
-
 def h3_pentagon_rule_staged(
     col: Column | str, parent_res: int, child_res: int
 ) -> Column:
-    """:func:`h3_pentagon_rule` specialized for one uncompaction stage
-    with STATIC resolutions: the output res is ``child_res`` (a
-    literal, no per-row res decode), a valid pentagon parent has all
-    digits 1..parent_res zero (ONE static mask test instead of a
-    per-term prefix scan), and only the ``child_res - parent_res``
-    appended digit positions can carry the first nonzero digit — so
-    the unrolled K-axis scan shrinks from 15 terms over the whole
-    digit area to ≤ MAX_OFFSET_DIFF terms over the appended range.
-    Same verdicts as the general rule on this stage's output."""
+    """The pentagon K-axis clause of :func:`h3_is_valid_cell` for the
+    output of one uncompaction stage with STATIC resolutions: False iff
+    the cell sits on a pentagon base cell, its digits 1..``parent_res``
+    are all zero (a pentagon parent), and its first nonzero appended
+    digit is the deleted K axis (1).
+
+    Children of structurally-VALID parents can violate nothing else —
+    every other clause of the full validity tree (mode bits, base-cell
+    range, digit-vs-resolution rules) is preserved by OR-ing child
+    digits into a valid parent — so the expansion filter needs only
+    this clause, with the same verdicts as :func:`h3_is_valid_cell` on
+    such children. The resolutions are literals, so there is no per-row
+    res decode, the pentagon parent is ONE static mask test, and the
+    unrolled K-axis scan covers only the ``child_res - parent_res`` ≤
+    MAX_OFFSET_DIFF appended digit positions. The pentagon-base
+    membership test comes first and whole-stage codegen short-circuits
+    ``And``, so the ~99% of rows on hexagon base cells never evaluate
+    the scan (the full tree was measured 40× on expansion throughput:
+    a 284M-row diff-6 stage ran 4.1 s unfiltered vs 164.8 s under
+    h3_is_valid_cell)."""
     col = _col(col)
     pent_base = h3_get_base_cell(col).isin(*sorted(c.PENTAGON_BASE_CELLS))
     if parent_res > 0:
@@ -319,24 +298,6 @@ def _child_offset(idx: Column, parent_res: int, child_res: int) -> Column:
             F.shiftleft(digit, 3 * (15 - (parent_res + 1 + i)))
         )
     return offset
-
-
-def h3_cell_offsets(spark: SparkSession, parent_res: int, child_res: int) -> DataFrame:
-    """Helper table of child suffixes for JVM-side uncompaction.
-
-    Returns ``7^(child_res-parent_res)`` rows with one column
-    ``child_offset`` (:func:`_child_offset` of each child id), to be
-    crossed with a parent frame and combined by
-    :func:`h3_uncompact_expr`. Pentagon parents need their invalid
-    children filtered afterwards. :func:`h3_expand_to_children` does
-    the same expansion in-plan without a join; callers that may span
-    more than MAX_OFFSET_DIFF resolutions must use it instead of one
-    frame.
-    """
-    n = 7 ** (child_res - parent_res)
-    return spark.range(n).select(
-        _child_offset(F.col("id"), parent_res, child_res).alias("child_offset")
-    )
 
 
 def h3_uncompact_expr(cell: Column, parent_res: int, child_res: int, offset: Column) -> Column:
