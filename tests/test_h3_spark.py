@@ -123,12 +123,14 @@ def test_uncompact_df_matches_python(spark):
 
 
 def test_uncompact_df_subset(spark):
+    from ukis_h3cellstore_spark.frame import H3DataFrame
+
     parent = c.build_cell(20, [3])
     kids = c.cell_to_children(parent, 3)
     keep = kids[::7]
     df = spark.createDataFrame([(parent, 1)], "h3index long, v int")
     cells_df = spark.createDataFrame([(k,) for k in keep], "h3index long")
-    out = compaction.uncompact_df(df, 3, "h3index", cells_df=cells_df)
+    out = H3DataFrame(df).uncompact(3, cells=cells_df).df
     assert sorted(r["h3index"] for r in out.collect()) == sorted(keep)
 
 

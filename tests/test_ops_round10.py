@@ -201,13 +201,38 @@ def test_ngram_diversity_gate_unchanged(spark):
         assert 0 <= r["diversity_milli"] <= 1000
 
 
-def test_cdc_precompact_identical_results(spark, tmp_path):
-    """precompact=True is semantics-free: the materialized table must
-    be bit-identical to the raw state path on a feed with duplicate
-    keys per batch, tombstones, and out-of-order sequence numbers."""
-    import random
-
+def _cdc_final(spark, src, d, maxf, sink):
+    """Stage ``src`` as 5 parquet files under ``d``, run ``cdc_upsert``
+    over it at ``maxf`` files per trigger into a memory sink named
+    ``sink`` and return the sink materialized as the max-``last_seq``
+    row per key, as a DataFrame."""
     from ukis_h3cellstore_spark import streaming as st
+
+    src.repartition(5).write.mode("overwrite").parquet(d)
+    stream = st.read_stream(spark, d, src.schema, max_files_per_trigger=maxf)
+    out = st.cdc_upsert(stream, "user_id", "seq", "is_del", "cents")
+    q = (
+        out.writeStream.format("memory").queryName(sink)
+        .outputMode("update").trigger(availableNow=True).start()
+    )
+    try:
+        assert q.awaitTermination(120), "cdc stream did not finish"
+    finally:
+        q.stop()
+    return (
+        spark.table(sink)
+        .groupBy("user_id")
+        .agg(F.max(F.struct("last_seq", "is_deleted", "last_value")).alias("m"))
+        .select("user_id", "m.last_seq", "m.is_deleted", "m.last_value")
+    )
+
+
+def test_cdc_upsert_matches_bruteforce(spark, tmp_path):
+    """cdc_upsert equals a brute-force per-key max of (seq, is_delete,
+    value) on a feed with duplicate keys per batch, tombstones and
+    out-of-order sequence numbers, at one and at five files per
+    micro-batch."""
+    import random
 
     rng = random.Random(1010)
     rows = [
@@ -222,38 +247,71 @@ def test_cdc_precompact_identical_results(spark, tmp_path):
     src = spark.createDataFrame(
         rows, "user_id long, seq long, is_del boolean, cents long"
     )
-
-    def run(pre, tag):
-        d = str(tmp_path / f"cdcpre_{tag}")
-        src.repartition(5).write.mode("overwrite").parquet(d)
-        stream = st.read_stream(spark, d, src.schema, max_files_per_trigger=2)
-        out = st.cdc_upsert(
-            stream, "user_id", "seq", "is_del", "cents", precompact=pre
+    want: dict = {}
+    for k, seq, dele, val in rows:
+        want[k] = max(want.get(k, (seq, dele, val)), (seq, dele, val))
+    for maxf in (1, 5):
+        got = _cdc_final(
+            spark, src, str(tmp_path / f"cdc_{maxf}"), maxf, f"t_cdc_bf_{maxf}"
         )
-        sink = f"t_cdcpre_{tag}"
-        q = (
-            out.writeStream.format("memory").queryName(sink)
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        assert q.awaitTermination(120)
-        return {
+        assert {
             r["user_id"]: (r["last_seq"], r["is_deleted"], r["last_value"])
-            for r in (
-                spark.table(sink)
-                .groupBy("user_id")
-                .agg(
-                    F.max(
-                        F.struct("last_seq", "is_deleted", "last_value")
-                    ).alias("m")
-                )
-                .select(
-                    "user_id", "m.last_seq", "m.is_deleted", "m.last_value"
-                )
-                .collect()
-            )
-        }
+            for r in got.collect()
+        } == want, maxf
 
-    assert run(True, "on") == run(False, "off")
+
+def test_cdc_upsert_keeps_input_types(spark, tmp_path):
+    """The output columns carry the input column types (no widening of
+    ``int`` to ``bigint``)."""
+    src = spark.createDataFrame(
+        [(1, 10, False, 5), (1, 20, True, 0), (2, 7, False, 3)],
+        "user_id int, seq int, is_del boolean, cents int",
+    )
+    got = _cdc_final(spark, src, str(tmp_path / "cdc_int"), 1, "t_cdc_int")
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+        ("user_id", "int"),
+        ("last_seq", "int"),
+        ("is_deleted", "boolean"),
+        ("last_value", "int"),
+    ]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, 20, True, 0),
+        (2, 7, False, 3),
+    ]
+
+
+@pytest.mark.parametrize("col", ["seq", "is_del"])
+def test_cdc_upsert_null_order_column_fails(spark, tmp_path, col):
+    """A change with a NULL seq or NULL delete flag has no place in
+    the last-writer-wins order: the stream fails with an error naming
+    the column instead of dropping the change or emitting a NULL
+    tombstone flag."""
+    from pyspark.errors import StreamingQueryException
+
+    rows = [(1, 10, False, 5), (2, 11, False, 6)]
+    rows.append((1, None, False, 7) if col == "seq" else (1, 12, None, 7))
+    src = spark.createDataFrame(
+        rows, "user_id long, seq long, is_del boolean, cents long"
+    )
+    with pytest.raises(StreamingQueryException, match=col):
+        _cdc_final(
+            spark, src, str(tmp_path / f"cdc_null_{col}"), 1, f"t_cdc_null_{col}"
+        ).collect()
+
+
+def test_cdc_upsert_bench_variant_matches_gate(spark, sf_dir):
+    """The bench variant of streaming_cdc_upsert_jvm (cached source,
+    one micro-batch) returns the gate's rows."""
+    from ukis_h3cellstore_spark.entry_queries_stream import (
+        q_streaming_cdc_upsert,
+        q_streaming_cdc_upsert_jvm_bench,
+    )
+
+    gate = sorted(tuple(r) for r in q_streaming_cdc_upsert(spark, sf_dir).collect())
+    bench = sorted(
+        tuple(r) for r in q_streaming_cdc_upsert_jvm_bench(spark, sf_dir).collect()
+    )
+    assert gate and bench == gate
 
 
 def test_funnel_repeated_stage_needs_distinct_events(spark):

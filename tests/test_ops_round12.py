@@ -240,9 +240,10 @@ class TestHierarchicalPolyfill:
         hier = icosa.polygon_to_cells_hierarchical(rings, res)
         assert hier == flat and len(flat) > 0
 
-    def test_small_polygon_takes_flat_path(self):
+    def test_small_polygon_single_level_equals_flat(self):
         # when the target-res covering disk is already affordable the
-        # hierarchical entry point IS the flat scan (start == res)
+        # hierarchical classifier starts at the target level: one
+        # vectorized containment pass over the flat scan's disk
         from ukis_h3cellstore_spark.h3 import icosa
 
         rings, res = self.FIXTURES["sf"]

@@ -2,7 +2,7 @@
 DataFrame-probe Q2 path (verdict r12 "what's wrong #1").
 
 The planet-scale query path (``query_tableset_cells_df``, its per-table
-select, the ``uncompact_df`` subset restrict and partition pruning)
+select, the ``H3DataFrame.uncompact`` subset restrict and partition pruning)
 used to FORCE ``F.broadcast`` on the probe cell frame; at the path's
 own design point (a res-8 continent AOI is 76M+ cells) the hint
 overrides Spark's size threshold into a multi-GB broadcast build. Now
@@ -96,31 +96,39 @@ class TestBuildTableQueryDfHint:
 
 
 class TestUncompactDfHint:
-    def test_subset_restrict_hint_conditioned(self, spark):
-        from ukis_h3cellstore_spark import compaction
+    def test_subset_restrict_hint_conditioned(self, spark, monkeypatch):
+        """``H3DataFrame.uncompact(cells=…)`` restricts through
+        ``query.cells_probe``: a short list is an IN filter, a longer
+        list a broadcast semi-join, a frame (size unknown) an
+        un-hinted semi-join — and all three return the same rows."""
+        from ukis_h3cellstore_spark import query as bq
+        from ukis_h3cellstore_spark.frame import H3DataFrame
         from ukis_h3cellstore_spark.h3 import cells as h3c
 
         region = h3c.build_cell(60, [1, 2, 3, 4])
         kids = h3c.cell_to_children(region, 7)
-        df = spark.createDataFrame([(region, 1.0)], "h3index long, v double")
+        wrapped = H3DataFrame(
+            spark.createDataFrame([(region, 1.0)], "h3index long, v double")
+        )
         cells_df = spark.createDataFrame([(k,) for k in kids[:3]], "h3index long")
 
-        hinted = compaction.uncompact_df(
-            df, 7, cells_df=cells_df, source_resolutions=[4], cells_count=3
-        )
-        assert _has_broadcast_hint(hinted)
+        listed = wrapped.uncompact(7, cells=kids[:3]).df
+        assert "LeftSemi" not in _optimized(listed)
 
-        unhinted = compaction.uncompact_df(
-            df, 7, cells_df=cells_df, source_resolutions=[4],
-            cells_count=compaction.build_query.BROADCAST_MAX_CELLS + 1,
-        )
+        unhinted = wrapped.uncompact(7, cells=cells_df).df
+        assert "LeftSemi" in _optimized(unhinted)
         assert not _has_broadcast_hint(unhinted)
 
-        # None keeps the hint (documented backward-compat for
-        # in-memory callers) and both forms agree on rows
-        assert sorted(r["h3index"] for r in hinted.collect()) == sorted(
-            r["h3index"] for r in unhinted.collect()
-        ) == sorted(kids[:3])
+        monkeypatch.setattr(bq, "MAX_INLIST_CELLS", 0)
+        hinted = wrapped.uncompact(7, cells=kids[:3]).df
+        assert _has_broadcast_hint(hinted)
+
+        assert (
+            sorted(r["h3index"] for r in hinted.collect())
+            == sorted(r["h3index"] for r in unhinted.collect())
+            == sorted(r["h3index"] for r in listed.collect())
+            == sorted(kids[:3])
+        )
 
 
 class TestQueryCellsDfScalePath:

@@ -82,3 +82,44 @@ def test_raster_real_hex_grid_roundtrip(spark, mask):
     assert lost / n_px < 0.005
     # classes survive: the two distinct values map back
     assert set(np.unique(back[back != 0])) == {3, 7}
+
+
+#: Spark jobs ``raster_to_dataframe(compact=True)`` may run while it
+#: builds its frame: a single-band compaction is one eager local
+#: checkpoint (2 jobs; the raster conversion runs once, inside it).
+#: Without the output resolution passed as ``max_res``, a
+#: ``max(resolution)`` aggregation re-ran the conversion first: 4 jobs.
+RASTER_COMPACT_MAX_JOBS = 2
+
+
+def test_raster_compact_jobs_ceiling(spark, mask):
+    """Compacting a raster runs at most ``RASTER_COMPACT_MAX_JOBS``
+    jobs and returns per-value ``compact_cells`` of the plain rows."""
+    import uuid
+
+    from ukis_h3cellstore_spark.h3 import cells as h3c
+
+    grid = geo.H3Grid()
+    plain = raster_to_dataframe(spark, mask, TRANSFORM, 4, grid=grid)
+    by_value: dict = {}
+    for r in plain.collect():
+        by_value.setdefault(r["value"], []).append(r["h3index"])
+    want = sorted(
+        (c, v) for v, cells in by_value.items() for c in h3c.compact_cells(cells)
+    )
+
+    sc = spark.sparkContext
+    group = f"raster-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs ceiling")
+    try:
+        compacted = raster_to_dataframe(
+            spark, mask, TRANSFORM, 4, grid=grid, compact=True
+        )
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= RASTER_COMPACT_MAX_JOBS, jobs
+    got = sorted((r["h3index"], r["value"]) for r in compacted.collect())
+    assert got == want
+    assert len(got) < len(plain.collect())  # something did compact

@@ -53,8 +53,8 @@ def _r9_block(spark, gc) -> None:
     """Round-9 smoke: the round-8 statistical/join operators at 10M
     rows under skew — W1 transport drift, Spearman, HITS, association
     rules (bounded basket width), blocked fuzzy join (one hot block),
-    and the CDC upsert state path driven as a real availableNow
-    stream over a pre-written 10M-row changelog."""
+    and the CDC upsert streaming aggregation driven as a real
+    availableNow stream over a pre-written 10M-row changelog."""
     import tempfile
     import time
 
@@ -153,11 +153,8 @@ def _r9_block(spark, gc) -> None:
     # tombstones) pre-written untimed, KEY-CLUSTERED per partition the
     # way real CDC feeds arrive (Debezium/Kafka topics partition by
     # primary key); the timed section is ONE availableNow pass through
-    # the applyInPandasWithState update — the state-update cost
-    # without the multi-trigger gate harness. Timed twice: with the
-    # r10 partition-local pre-compaction (state path sees ~1 row/key)
-    # and without it (the r9 ceiling, every change crosses the
-    # Arrow/Python state boundary).
+    # the cdc_upsert streaming aggregation — the state-update cost
+    # without the multi-trigger gate harness.
     chg_dir = tempfile.mkdtemp(prefix="cdc_smoke_")
     spark.range(10_000_000).select(
         (_F.col("id") % 1_000_000).alias("k"),
@@ -167,37 +164,13 @@ def _r9_block(spark, gc) -> None:
     ).repartition(8, "k").write.mode("overwrite").parquet(chg_dir)
     from ukis_h3cellstore_spark import streaming as ST
 
-    def run_cdc(pre):
-        out_dir = tempfile.mkdtemp(prefix="cdc_smoke_sink_")
-
-        def go():
-            stream = spark.readStream.schema(
-                "k long, seq long, is_delete boolean, val long"
-            ).parquet(chg_dir)
-            q = (
-                ST.cdc_upsert(
-                    stream, "k", "seq", "is_delete", "val", precompact=pre
-                )
-                .writeStream.format("noop")
-                .outputMode("update")
-                .option("checkpointLocation", out_dir + "/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        return go
-
-    timed("cdc_upsert_steady_10M_precompact", run_cdc(True), 10_000_000)
-    timed("cdc_upsert_steady_10M_nopre", run_cdc(False), 10_000_000)
-
-    def run_cdc_jvm():
+    def run_cdc():
         out_dir = tempfile.mkdtemp(prefix="cdc_smoke_sink_")
         stream = spark.readStream.schema(
             "k long, seq long, is_delete boolean, val long"
         ).parquet(chg_dir)
         q = (
-            ST.cdc_upsert_jvm(stream, "k", "seq", "is_delete", "val")
+            ST.cdc_upsert(stream, "k", "seq", "is_delete", "val")
             .writeStream.format("noop")
             .outputMode("update")
             .option("checkpointLocation", out_dir + "/ckpt")
@@ -206,16 +179,15 @@ def _r9_block(spark, gc) -> None:
         )
         q.awaitTermination()
 
-    timed("cdc_upsert_jvm_10M", run_cdc_jvm, 10_000_000)
+    timed("cdc_upsert_10M", run_cdc, 10_000_000)
 
 
 def _r10_block(spark, gc) -> None:
     """Round-10 smoke: corpus-vs-corpus margin mining at 100k vectors
     through the IVF probed lists (the non-broadcast scoring join —
     candidate volume nprobe * n^2 / n_centroids ~ 78M pairs at
-    512 centroids / nprobe 4). The CDC upsert trio (precompact /
-    no-precompact / pure-JVM) lives in the --r9 block, which stages
-    the 10M-row key-clustered changelog it shares."""
+    512 centroids / nprobe 4). The CDC upsert timing lives in the
+    --r9 block, which stages the 10M-row key-clustered changelog."""
     import time
 
     from pyspark.sql import functions as _F

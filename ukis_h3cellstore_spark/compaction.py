@@ -22,9 +22,10 @@ Spark-first design (scale notes):
   a sequence of child ids turned into child cells by pure bit
   arithmetic — no join, no broadcast — staged so no sequence exceeds
   7^MAX_OFFSET_DIFF ids even for a res-0 row under a res-10 target) —
-  the Spark realization of the reference's client-side
+  the expansion of the reference's client-side
   ``h3_uncompact_dataframe_subset`` (``mod.rs:459-477``) that scales to
-  any number of rows (no driver materialization).
+  any number of rows (no driver materialization); its subset restrict
+  is ``H3DataFrame.uncompact``'s.
 """
 
 from __future__ import annotations
@@ -34,7 +35,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ukis_h3cellstore_spark import query as build_query
 from ukis_h3cellstore_spark.h3 import cells as h3c
 from ukis_h3cellstore_spark.h3 import expressions as hx
 
@@ -226,9 +226,7 @@ def uncompact_df(
     df: DataFrame,
     target_res: int,
     h3index_column: str = "h3index",
-    cells_df: DataFrame | None = None,
     source_resolutions: list[int] | None = None,
-    cells_count: int | None = None,
 ) -> DataFrame:
     """Expand mixed-resolution rows to ``target_res`` descendants.
 
@@ -238,21 +236,15 @@ def uncompact_df(
     descendants that would carry a K-axis digit are filtered out with a
     validity bit-test.
 
-    ``cells_df`` (single column named like ``h3index_column``)
-    optionally restricts the result via a left-semi join — the
-    reference's "uncompact subset" (``mod.rs:459-477``). The join is
-    broadcast-hinted only when ``cells_count`` (the caller's bound on
-    the restriction set's size, when known) is at most
-    ``query.BROADCAST_MAX_CELLS``; an unknown size keeps the hint for
-    backward compatibility with in-memory callers, so pass the bound
-    whenever the set may be continent-scale.
+    The reference's "uncompact subset" (``mod.rs:459-477``) is
+    :meth:`H3DataFrame.uncompact` with ``cells``: it restricts this
+    result through the read path's one cell-predicate rule.
 
     ``source_resolutions``: the resolutions that may occur in ``df``
     below ``target_res``. Pass it when the caller knows (the store
     does — each pyramid table holds exactly one resolution); otherwise
     it is discovered with an extra pass over the data.
     """
-    spark = df.sparkSession
     h3col = F.col(h3index_column)
     res_col = hx.h3_get_resolution(h3col)
 
@@ -285,11 +277,4 @@ def uncompact_df(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    if cells_df is not None:
-        restrict = cells_df.select(
-            F.col(cells_df.columns[0]).alias(h3index_column)
-        ).distinct()
-        if cells_count is None or cells_count <= build_query.BROADCAST_MAX_CELLS:
-            restrict = F.broadcast(restrict)
-        out = out.join(restrict, on=h3index_column, how="leftsemi")
     return out

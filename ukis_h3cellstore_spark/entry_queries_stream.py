@@ -953,30 +953,34 @@ GROUP BY 1
 """
 
 
-def q_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC apply (streaming.py:cdc_upsert): last-writer-wins upsert
-    with tombstones over the events table replayed as a change stream
-    (event_id as the LSN; 'click' rows are deletes). The per-key state
-    is the max of (seq, is_delete, value) — associative, commutative,
-    idempotent — so the materialized table is micro-batch-split-proof
-    and equals the batch argmax the oracle computes. Final
-    materialization: max last_seq per key over the update-mode
-    emissions."""
-
-    from ukis_h3cellstore_spark import streaming as st
-
+def _cdc_upsert_gate(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    max_files_per_trigger: int | None,
+    src_cache: dict[str, str] | None = None,
+) -> DataFrame:
+    """The events table replayed as a change stream (event_id as the
+    LSN; 'click' rows are deletes) through :func:`streaming.cdc_upsert`
+    into a memory sink, materialized as the max-``last_seq`` row per
+    key over the update-mode emissions. The change source is staged
+    under ``prefix``; with ``src_cache`` it is staged once per sf_dir."""
     src = _events(spark, sf_dir).select(
         F.col("user_id"),
         F.col("event_id").alias("seq"),
         (F.col("event_type") == "click").alias("is_del"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    stream_dir = _stable_tmpdir("cdc_src_", sf_dir)
-    src.repartition(8).write.mode("overwrite").parquet(stream_dir)
-    stream = st.read_stream(spark, stream_dir, src.schema, max_files_per_trigger=2)
+    stream_dir = src_cache.get(sf_dir) if src_cache is not None else None
+    if stream_dir is None:
+        stream_dir = _stable_tmpdir(f"{prefix}src_", sf_dir)
+        src.repartition(8).write.mode("overwrite").parquet(stream_dir)
+        if src_cache is not None:
+            src_cache[sf_dir] = stream_dir
+    stream = st.read_stream(spark, stream_dir, src.schema, max_files_per_trigger)
     out = st.cdc_upsert(stream, "user_id", "seq", "is_del", "cents")
     _SINK_COUNTER[0] += 1
-    sink = f"cdc_sink_{_SINK_COUNTER[0]}"
+    sink = f"{prefix}sink_{_SINK_COUNTER[0]}"
     q = (
         out.writeStream.format("memory")
         .queryName(sink)
@@ -996,6 +1000,16 @@ def q_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("m.last_value").alias("last_value"),
         )
     )
+
+
+def q_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CDC apply (streaming.py:cdc_upsert): last-writer-wins upsert
+    with tombstones, two staged files per micro-batch. The per-key
+    state is the max of (seq, is_delete, value) — associative,
+    commutative, idempotent — so the materialized table is
+    micro-batch-split-proof and equals the batch argmax the oracle
+    computes."""
+    return _cdc_upsert_gate(spark, sf_dir, "cdc_", 2)
 
 
 _Q_STREAMING_CDC_UPSERT_SQL = """
@@ -1015,108 +1029,36 @@ FROM w WHERE rn = 1
 """
 
 
+def q_streaming_cdc_upsert_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``streaming_cdc_upsert`` over a finer micro-batch split (one
+    staged file per trigger): the same reducer and oracle, so the two
+    gates agreeing proves the result independent of the split."""
+    return _cdc_upsert_gate(spark, sf_dir, "cdc_jvm_", 1)
+
+
 #: bench-only: pre-written change source per sf_dir so repeated bench
 #: runs time the STATE path, not tempdir parquet writes
 _CDC_BENCH_SRC: dict[str, str] = {}
 
 
-def q_streaming_cdc_upsert_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC apply, pure-JVM form (streaming.py:cdc_upsert_jvm): the
-    same last-writer-wins-with-tombstones contract as
-    streaming_cdc_upsert, but the associative per-key argmax runs as
-    a whole-stage-codegen streaming aggregation in the JVM state
-    store — map-side partial aggregation per micro-batch, zero
-    Arrow/Python crossings, measured 21x the Python-state form at 10M
-    changes (docs/SCALE.md). Same oracle: the batch argmax per key."""
-    from ukis_h3cellstore_spark import streaming as st
-
-    src = _events(spark, sf_dir).select(
-        F.col("user_id"),
-        F.col("event_id").alias("seq"),
-        (F.col("event_type") == "click").alias("is_del"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    stream_dir = _stable_tmpdir("cdc_jvm_src_", sf_dir)
-    src.repartition(8).write.mode("overwrite").parquet(stream_dir)
-    stream = st.read_stream(spark, stream_dir, src.schema, max_files_per_trigger=2)
-    out = st.cdc_upsert_jvm(stream, "user_id", "seq", "is_del", "cents")
-    _SINK_COUNTER[0] += 1
-    sink = f"cdc_jvm_sink_{_SINK_COUNTER[0]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
-    return (
-        spark.table(sink)
-        .groupBy("user_id")
-        .agg(F.max(F.struct("last_seq", "is_deleted", "last_value")).alias("m"))
-        .select(
-            "user_id",
-            F.col("m.last_seq").alias("last_seq"),
-            F.col("m.is_deleted").alias("is_deleted"),
-            F.col("m.last_value").alias("last_value"),
-        )
-    )
-
-
 def q_streaming_cdc_upsert_jvm_bench(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Steady-state bench variant of ``streaming_cdc_upsert_jvm``:
-    same operator and final materialization, but the change source is
+    """Steady-state bench variant of ``streaming_cdc_upsert``: same
+    operator and final materialization, but the change source is
     written ONCE per sf_dir (cached across the bench's min-of-3 runs)
     and consumed in a SINGLE availableNow micro-batch — so the timed
     number is the JVM state aggregation, not the staging write and the
     multi-trigger harness the correctness gate pays."""
-    from ukis_h3cellstore_spark import streaming as st
-    from ukis_h3cellstore_spark.entry_queries import _stable_tmpdir
-
-    src = _events(spark, sf_dir).select(
-        F.col("user_id"),
-        F.col("event_id").alias("seq"),
-        (F.col("event_type") == "click").alias("is_del"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    stream_dir = _CDC_BENCH_SRC.get(sf_dir)
-    if stream_dir is None:
-        stream_dir = _stable_tmpdir("cdc_bench_src_", sf_dir)
-        src.repartition(8).write.mode("overwrite").parquet(stream_dir)
-        _CDC_BENCH_SRC[sf_dir] = stream_dir
-    stream = st.read_stream(spark, stream_dir, src.schema)
-    out = st.cdc_upsert_jvm(stream, "user_id", "seq", "is_del", "cents")
-    _SINK_COUNTER[0] += 1
-    sink = f"cdc_jvm_bench_sink_{_SINK_COUNTER[0]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q)
-    return (
-        spark.table(sink)
-        .groupBy("user_id")
-        .agg(
-            F.max(F.struct("last_seq", "is_deleted", "last_value")).alias("m")
-        )
-        .select(
-            "user_id",
-            F.col("m.last_seq").alias("last_seq"),
-            F.col("m.is_deleted").alias("is_deleted"),
-            F.col("m.last_value").alias("last_value"),
-        )
+    return _cdc_upsert_gate(
+        spark, sf_dir, "cdc_bench_", None, src_cache=_CDC_BENCH_SRC
     )
 
 
 def q_streaming_cdc_tableset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC composition flagship of the streaming family: change
-    stream → :func:`streaming.cdc_upsert_jvm` (pure-JVM last-writer-
-    wins state) → :func:`streaming.cdc_apply_into_tableset` (per
+    stream → :func:`streaming.cdc_upsert` (JVM last-writer-wins
+    state) → :func:`streaming.cdc_apply_into_tableset` (per
     micro-batch, keep-max-version merge into a MUTABLE tableset via
     ``ReplacingMergeTree(ver, is_deleted)`` semantics + touched-
     partition refresh of the res-4 rollup from the post-merge live
@@ -1160,7 +1102,7 @@ def q_streaming_cdc_tableset(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = st.read_stream(
         spark, stream_dir, src.schema, max_files_per_trigger=2
     )
-    upsert = st.cdc_upsert_jvm(stream, "h3index", "seq", "is_del", "cents")
+    upsert = st.cdc_upsert(stream, "h3index", "seq", "is_del", "cents")
     store = CellStore(spark, _stable_tmpdir("cdc_ts_wh_", sf_dir))
     q = _st.cdc_apply_into_tableset(
         store,

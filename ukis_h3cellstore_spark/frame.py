@@ -55,31 +55,21 @@ class H3DataFrame:
         )
 
     def uncompact(
-        self, target_res: int, cells: list[int] | None = None
+        self, target_res: int, cells: list[int] | DataFrame | None = None
     ) -> "H3DataFrame":
         """``h3_uncompact_dataframe_subset`` parity (mod.rs:459-477):
-        expand mixed-resolution rows to ``target_res``; ``cells``
-        optionally restricts the output."""
-        from ukis_h3cellstore_spark import compaction
-        from ukis_h3cellstore_spark.query import cells_frame
+        expand mixed-resolution rows to ``target_res``; ``cells`` (a
+        list, or a frame with a column named like the h3 column)
+        optionally restricts the output through the read path's
+        cell-predicate rule (:func:`query.cells_probe`)."""
+        from ukis_h3cellstore_spark import compaction, query
 
-        cells_df = None
-        cells_count = None
+        name = self.h3index_column_name
+        out = compaction.uncompact_df(self.df, target_res, name)
         if cells is not None:
-            cells_df = cells_frame(
-                self.df.sparkSession, self.h3index_column_name, list(cells)
-            )
-            cells_count = len(cells)
-        return H3DataFrame(
-            compaction.uncompact_df(
-                self.df,
-                target_res,
-                self.h3index_column_name,
-                cells_df=cells_df,
-                cells_count=cells_count,
-            ),
-            self.h3index_column_name,
-        )
+            probe = query.cells_probe(self.df.sparkSession, name, cells)
+            out = query.cells_predicate(out, name, probe)
+        return H3DataFrame(out, name)
 
     def partition_by_resolution(self) -> dict[int, DataFrame]:
         """``h3_partition_by_resolution`` parity (insert.rs:99-108):

@@ -98,12 +98,13 @@ class H3Grid:
         return 2.0 * math.degrees(self._core.mean_edge_length_rads(res))
 
     def polygon_to_cells(self, polygon: Sequence, res: int) -> list[int]:
-        # the hierarchical form IS the flat form for small polygons
-        # (it only switches strategy when the covering disk at the
-        # target resolution is large) and is pytest-pinned equal on
-        # adversarial fixtures — continent-sized AOIs classify ~97%
-        # of the area arithmetically instead of ~0.4 ms/cell scalar
-        # containment tests (res-6 Africa box: ~10 min → ~5 s)
+        # the hierarchical form tests the flat form's covering disk
+        # directly for small polygons (it only recurses when the disk
+        # at the target resolution is large) and is pytest-pinned
+        # equal on adversarial fixtures — continent-sized AOIs
+        # classify ~97% of the area arithmetically instead of
+        # ~0.4 ms/cell scalar containment tests (res-6 Africa box:
+        # ~10 min → ~5 s)
         return self._core.polygon_to_cells_hierarchical(polygon, res)
 
 

@@ -1472,7 +1472,8 @@ def polygon_to_cells_hierarchical(
       by pure index arithmetic, outside parents are dropped;
     - only the boundary band (≈ perimeter-sized, not area-sized)
       recurses to the next finer level, and reaches the target
-      resolution with a scalar test per remaining cell.
+      resolution with a vectorized containment test per remaining
+      cell.
 
     Distance-to-boundary lower bounds come from one densified sample
     set of all rings (numpy dot products against unit vectors, minus
@@ -1483,8 +1484,8 @@ def polygon_to_cells_hierarchical(
 
     The coarsest level is chosen so its covering disk stays under
     ``max_level_candidates``; when the target resolution itself fits,
-    this IS the flat form (small polygons take the identical path,
-    which is why the polyfill gates are unaffected)."""
+    the classifier starts there and runs one vectorized containment
+    test over the same covering disk the flat form scans."""
     interior, leaves = polygon_to_cells_cover(rings, res, max_level_candidates)
     out = list(leaves)
     for cell, level in interior:
@@ -1570,13 +1571,6 @@ def polygon_to_cells_cover_np(
             break
         start -= 1
     center, kk = _poly_anchor(rings, start)
-    empty = np.empty(0, dtype=np.int64)
-    if start == res:
-        return (
-            empty,
-            empty,
-            np.array(polygon_to_cells(rings, res), dtype=np.int64),
-        )
 
     # ---- exact chord-segment distance machinery (level-independent,
     # built ONCE per cover). The boundary is the plate-carrée polyline

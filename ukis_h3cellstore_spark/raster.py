@@ -127,7 +127,9 @@ def raster_to_dataframe(
     if compact:
         from ukis_h3cellstore_spark import compaction
 
-        out = compaction.compact_df(out, "h3index")
+        # every row is at h3_resolution: passing it spares compact_df
+        # the max-resolution aggregation (a re-run of the conversion)
+        out = compaction.compact_df(out, "h3index", max_res=h3_resolution)
     return out
 
 

@@ -832,7 +832,7 @@ class CellStore:
 
         ``df`` holds per-key WINNERS at the tableset's max resolution —
         one row per cell, e.g. a micro-batch of
-        :func:`~ukis_h3cellstore_spark.streaming.cdc_upsert_jvm`
+        :func:`~ukis_h3cellstore_spark.streaming.cdc_upsert`
         output. The pipeline:
 
         1. base level: one staged write of the touched base partitions
@@ -1153,7 +1153,8 @@ class CellStore:
             # strengthening the Summing path documents above). The
             # deleted column ranks second so a tombstone wins a version
             # tie — a delete at version v beats an update at version v,
-            # matching the cdc_upsert argmax (streaming.py).
+            # matching cdc_upsert's max(struct(seq, is_delete, value))
+            # reducer (streaming.py).
             part_cols = [
                 c for c in self._partition_columns(schema) if c in df.columns
             ]

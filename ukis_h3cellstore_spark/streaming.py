@@ -18,6 +18,10 @@ ingestion at scale:
 - :func:`stateful_cell_accumulator` — ``applyInPandasWithState``
   per-cell running aggregation (count/sum/max watermark-free), the
   template for custom stateful operators.
+- :func:`cdc_upsert` — last-writer-wins CDC apply with tombstones as
+  one JVM streaming aggregation (``max(struct(seq, is_delete,
+  value))`` per key); :func:`cdc_apply_into_tableset` feeds its
+  update-mode output into a mutable tableset pyramid.
 
 Scale: every operator keys state/shuffle by H3 cell (or parent cell),
 so a 1000-executor cluster partitions the cell space; nothing
@@ -28,13 +32,12 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     LongType,
     StringType,
     StructField,
@@ -471,123 +474,55 @@ def cdc_upsert(
     seq_col: str,
     delete_col: str,
     value_col: str,
-    precompact: bool = False,
 ) -> DataFrame:
     """Streaming CDC apply: last-writer-wins upsert with tombstones —
     the change-data-capture consumer that materializes a mutable
     table from an insert/update/delete event stream (the Debezium →
     lakehouse pattern).
 
-    Per key the state is ONE tuple: the change record with the
-    maximal ``(seq, is_delete, value)`` — an associative, commutative,
-    idempotent max, so the materialized row per key is independent of
-    micro-batch boundaries, arrival order, and replays (exactly the
-    property file-compaction CDC sinks need). Deletes are kept as
+    The per-key reducer is ``max(struct(seq, is_delete, value))`` — an
+    associative, commutative, idempotent max, so the materialized row
+    per key is independent of micro-batch boundaries, arrival order
+    and replays. It runs as a streaming ``groupBy().agg()``: the state
+    (one struct per key) lives in the JVM state store, each
+    micro-batch partial-aggregates map-side before the state shuffle,
+    and no row crosses the Arrow/Python boundary. Deletes are kept as
     TOMBSTONES in state (dropping them would resurrect a key when a
     late pre-delete update arrives); the live-table view is
     ``is_deleted = false`` downstream.
 
-    Emits, per key and micro-batch, the current winner
-    ``(key, last_seq, is_deleted, last_value)``; ``last_seq`` is
-    non-decreasing per key, so the final materialization is the row
-    with max ``last_seq`` per key. State is O(1) per key.
+    Emits, per key and micro-batch (update mode), the current winner
+    ``(key, last_seq, is_deleted, last_value)`` with the input column
+    types; ``last_seq`` is non-decreasing per key, so the final
+    materialization is the row with max ``last_seq`` per key.
 
-    THROUGHPUT: this Python-state form exists for ARBITRARY per-key
-    logic; for this particular reducer (an associative max) use
-    :func:`cdc_upsert_jvm`, which is the same contract as a pure-JVM
-    streaming aggregation and measured 21× faster (10M changes / 1M
-    keys, local[32]: 4.6 s vs 96 s — the Arrow/Python state boundary
-    is the entire cost, see docs/SCALE.md).
+    A change whose ``seq_col`` or ``delete_col`` is NULL has no place
+    in the order, so it fails the micro-batch with an error naming
+    the column instead of being dropped or read as a live row."""
 
-    ``precompact=True`` inserts a PARTITION-LOCAL, batch-local
-    pre-compaction before the state path: a stateless Arrow-batched
-    ``mapInPandas`` that reduces each batch to one argmax row per key
-    it contains. Because the argmax is associative and idempotent,
-    the state result is bit-identical with or without it (equivalence
-    pytest-verified). Default OFF, and for THIS reducer it is never
-    the right tool: the last-writer-wins argmax is an associative
-    aggregate, so :func:`cdc_upsert_jvm` strictly dominates — its
-    native map-side partial aggregation performs the same shuffle-row
-    reduction inside whole-stage codegen with zero Arrow crossings
-    (measured 21×; every change here still crosses the Arrow boundary
-    once in the compactor — a wash locally, 99 s vs 96 s at 10M).
-    The flag exists for the narrower case where per-key logic is NOT
-    aggregate-expressible (so the Python state op must stay) AND the
-    feed is key-clustered within batches (the Debezium/Kafka norm),
-    where it shrinks the rows entering the state shuffle toward
-    keys-sized at the cost of one extra stateless Arrow pass. (The
-    ideal shape — a codegen ``groupBy().agg(max(...))`` CHAINED ahead
-    of the state op — is rejected by Spark's stateful-operator
-    checker: "applyInPandasWithState in update mode is not supported
-    with aggregation on a streaming DataFrame", Spark 4.1.)"""
-    if precompact:
-        cols = [key_col, seq_col, delete_col, value_col]
-        fields = {f.name: f for f in stream.schema.fields}
-        proj_schema = StructType([fields[c] for c in cols])
+    def not_null(c: str) -> Column:
+        return F.when(
+            F.col(c).isNull(),
+            F.raise_error(F.lit(f"cdc_upsert: NULL in column {c!r}")),
+        ).otherwise(F.col(c))
 
-        def compact(pdf_iter):
-            for pdf in pdf_iter:
-                if not len(pdf):
-                    continue
-                yield (
-                    pdf.sort_values(
-                        [seq_col, delete_col, value_col], kind="stable"
-                    ).drop_duplicates(subset=[key_col], keep="last")
+    return (
+        stream.groupBy(key_col)
+        .agg(
+            F.max(
+                F.struct(
+                    not_null(seq_col).alias("seq"),
+                    not_null(delete_col).alias("dele"),
+                    F.col(value_col).alias("val"),
                 )
-
-        stream = stream.select(*cols).mapInPandas(compact, proj_schema)
-
-    def update(key, pdf_iter, state: GroupState):
-        import numpy as np
-        import pandas as pd
-
-        best = tuple(state.get) if state.exists else None
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            arr = np.column_stack(
-                [
-                    pdf[seq_col].to_numpy("int64"),
-                    pdf[delete_col].to_numpy(bool).astype("int64"),
-                    pdf[value_col].to_numpy("int64"),
-                ]
-            )
-            # vectorized lexicographic argmax (last key first for lexsort)
-            i = np.lexsort((arr[:, 2], arr[:, 1], arr[:, 0]))[-1]
-            cand = (int(arr[i, 0]), int(arr[i, 1]), int(arr[i, 2]))
-            if best is None or cand > best:
-                best = cand
-        state.update(best)
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "last_seq": [best[0]],
-                "is_deleted": [bool(best[1])],
-                "last_value": [best[2]],
-            }
+            ).alias("__m")
         )
-
-    out_schema = StructType(
-        [
-            StructField(key_col, LongType()),
-            StructField("last_seq", LongType()),
-            StructField("is_deleted", BooleanType()),
-            StructField("last_value", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("seq", LongType()),
-            StructField("dele", LongType()),
-            StructField("val", LongType()),
-        ]
-    )
-    return stream.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        .select(
+            key_col,
+            F.col("__m.seq").alias("last_seq"),
+            F.col("__m.dele").alias("is_deleted"),
+            F.col("__m.val").alias("last_value"),
+        )
     )
 
 
@@ -599,10 +534,10 @@ def cdc_apply_into_tableset(
     trigger_available_now: bool = False,
 ):
     """Compose the CDC family into the CellStore: a streaming upsert
-    (the UPDATE-mode output of :func:`cdc_upsert_jvm` /
-    :func:`cdc_upsert`, columns ``(h3index, version, deleted, ...)``
-    named per ``schema``) materializes a MUTABLE tableset pyramid —
-    the Debezium → lakehouse → H3 shape. Every micro-batch delivers
+    (the UPDATE-mode output of :func:`cdc_upsert`, columns
+    ``(h3index, version, deleted, ...)`` named per ``schema``)
+    materializes a MUTABLE tableset pyramid — the Debezium →
+    lakehouse → H3 shape. Every micro-batch delivers
     one winner row per key updated in that batch;
     ``store.upsert_h3dataframe_into_tableset`` merges it keep-max-
     version into the base level and refreshes the touched coarse
@@ -624,46 +559,3 @@ def cdc_apply_into_tableset(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def cdc_upsert_jvm(
-    stream: DataFrame,
-    key_col: str,
-    seq_col: str,
-    delete_col: str,
-    value_col: str,
-) -> DataFrame:
-    """:func:`cdc_upsert` as a pure-JVM streaming aggregation — the
-    scale path. The per-key last-writer-wins reducer is an
-    associative, commutative, idempotent ``max(struct(seq, is_delete,
-    value))``, which is exactly a streaming ``groupBy().agg()``: the
-    state lives in the JVM state store, updates run in whole-stage
-    codegen with map-side partial aggregation (each micro-batch
-    partial-aggregates BEFORE the state shuffle — the pre-compaction
-    Spark refuses to chain in front of ``applyInPandasWithState`` it
-    performs natively here), and no row ever crosses the Arrow/Python
-    boundary. Measured 21× over the Python-state form at 10M changes
-    / 1M keys on local[32] (4.6 s vs 96 s; docs/SCALE.md).
-
-    Identical output contract: per key and micro-batch (update mode),
-    ``(key, last_seq, is_deleted, last_value)``; tombstones are kept
-    in state; the final materialization is the max-``last_seq`` row
-    per key. Use :func:`cdc_upsert` only when the per-key logic is
-    NOT expressible as Spark aggregates."""
-    return (
-        stream.groupBy(key_col)
-        .agg(
-            F.max(
-                F.struct(
-                    F.col(seq_col).alias("seq"),
-                    F.col(delete_col).alias("dele"),
-                    F.col(value_col).alias("val"),
-                )
-            ).alias("__m")
-        )
-        .select(
-            key_col,
-            F.col("__m.seq").alias("last_seq"),
-            F.col("__m.dele").alias("is_deleted"),
-            F.col("__m.val").alias("last_value"),
-        )
-    )
