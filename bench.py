@@ -130,24 +130,20 @@ HEADLINE = [
 #: HEADLINE name they replace.
 def _bench_variants():
     from ukis_h3cellstore_spark.entry_queries_ops import (
-        q_ann_ivfpq_top3_bench,
         q_embedding_margin_pairs_ivf_bench,
-        q_semantic_dedup_bench,
     )
     from ukis_h3cellstore_spark.entry_queries_stream import (
         q_streaming_cdc_upsert_jvm_bench,
     )
 
     return {
-        "ann_ivfpq_top3": q_ann_ivfpq_top3_bench,
-        "dedup_semantic": q_semantic_dedup_bench,
         # steady-state CDC: single availableNow batch over a cached
         # source — times the JVM state aggregation, not the
         # tempdir write and multi-trigger harness the correctness gate
         # pays (that harness cost masked the operator cost)
         "streaming_cdc_upsert_jvm": q_streaming_cdc_upsert_jvm_bench,
         # train-once-reuse: cached centroids, times the probed-list
-        # mining (the gate keeps the oracle-pinned training inline)
+        # mining (the gate keeps training inline)
         "embedding_margin_pairs_ivf": q_embedding_margin_pairs_ivf_bench,
     }
 

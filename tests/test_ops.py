@@ -5,6 +5,8 @@ the ANN path, no row-at-a-time Python UDFs in JVM-path operators)."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -255,16 +257,69 @@ def test_kmeans_fit_separates_obvious_clusters(spark):
     assert axes == [False, True]
 
 
-def test_kmeans_exact_mean_matches_streaming_mean(spark):
-    rows = [(i, [float(i % 7), float((3 * i) % 5), 1.0]) for i in range(40)]
+def _kmeans_rows():
+    return [(i, [float(i % 7), float((3 * i) % 5), 1.0]) for i in range(40)]
+
+
+def _serial_lloyd(rows, n_centroids, iters):
+    """Pure-Python kmeans_fit replica: lowest-id seeds, cosine argmax
+    (ties → lowest centroid id), per-dim means as serial folds in id
+    order."""
+
+    def cos(a, b):
+        dot = sum(x * y for x, y in zip(a, b))
+        return dot / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b)))
+
+    rows = sorted(rows)
+    cents = {i: list(v) for i, v in rows[:n_centroids]}
+    for _ in range(iters):
+        members: dict = {}
+        for _i, v in rows:
+            best = max(cents, key=lambda c: (cos(v, cents[c]), -c))
+            members.setdefault(best, []).append(v)
+        cents = {}
+        for c, vs in members.items():
+            mean = []
+            for d in range(len(vs[0])):
+                acc = 0.0
+                for v in vs:
+                    acc += v[d]
+                mean.append(acc / len(vs))
+            cents[c] = mean
+    return cents
+
+
+def test_kmeans_centroids_equal_serial_mean_of_final_assignment(spark):
+    """The streaming avg update equals a serial per-dim mean of the
+    final assignment, and does not depend on the input partitioning."""
+    df = spark.createDataFrame(_kmeans_rows(), "vec_id long, embedding array<float>")
+    want = _serial_lloyd(_kmeans_rows(), 4, 2)
+    got = {}
+    for parts in (1, 7):
+        cent = S.kmeans_fit(df.repartition(parts), n_centroids=4, max_iter=2)
+        got[parts] = {int(r.centroid_id): list(r.c_vec) for r in cent.collect()}
+    assert got[1] == got[7]
+    assert got[1].keys() == want.keys()
+    for c, vec in want.items():
+        assert all(abs(x - y) < 1e-9 for x, y in zip(got[1][c], vec))
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [[float("nan"), 1.0, 1.0], [None, 1.0, 1.0], None, [float("inf"), 1.0, 1.0]],
+    ids=["nan_component", "null_component", "null_vector", "inf_component"],
+)
+def test_training_fails_loudly_on_non_finite_vectors(spark, bad):
+    """One bad training vector must fail the job naming the column —
+    not collapse the centroids into NaN, or drop silently out of the
+    mean."""
+    rows = _kmeans_rows()
+    rows[17] = (17, bad)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    a = S.kmeans_fit(df, n_centroids=4, max_iter=2, exact_mean=True).toPandas()
-    b = S.kmeans_fit(df, n_centroids=4, max_iter=2, exact_mean=False).toPandas()
-    va = {int(r.centroid_id): r.c_vec for r in a.itertuples()}
-    vb = {int(r.centroid_id): r.c_vec for r in b.itertuples()}
-    assert va.keys() == vb.keys()
-    for k in va:
-        assert all(abs(x - y) < 1e-9 for x, y in zip(va[k], vb[k]))
+    with pytest.raises(Exception, match=r"kmeans_fit: .* vector column 'embedding'"):
+        S.kmeans_fit(df, n_centroids=4, max_iter=2).collect()
+    with pytest.raises(Exception, match=r"pq_train: .* vector column 'embedding'"):
+        S.pq_train(df, m=1, n_centroids=4, dims=3, max_iter=2).collect()
 
 
 def test_ivf_topk_no_corpus_window(vecs):
@@ -1535,7 +1590,7 @@ def test_semantic_dedup_max_cluster_size_cap_and_report(spark):
         (4, [0.0, 0.0, 0.0, 1.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kw = dict(n_clusters=3, train_iters=2, exact_mean=True)
+    kw = dict(n_clusters=3, train_iters=2)
     uncapped = (
         S.semantic_dedup(df, threshold=0.99, **kw).toPandas().set_index("vec_id")
     )
@@ -1578,7 +1633,6 @@ def test_semantic_dedup_matrix_kernel_equals_join_path(spark):
             n_clusters=4,
             threshold=0.8,
             train_iters=2,
-            exact_mean=True,
             max_cluster_size=cap,
         )
         m = S.semantic_dedup(df, pairwise="matrix", **kw).orderBy("vec_id")

@@ -314,6 +314,21 @@ def test_cdc_upsert_bench_variant_matches_gate(spark, sf_dir):
     assert gate and bench == gate
 
 
+def test_margin_pairs_ivf_bench_variant_matches_gate(spark, sf_dir):
+    """The bench variant of embedding_margin_pairs_ivf (cached
+    centroids, gemm scorer) returns the gate's rows after the
+    correctness gate's normalization."""
+    from tools.check_correctness import normalize
+    from ukis_h3cellstore_spark.entry_queries_ops import (
+        q_embedding_margin_pairs_ivf,
+        q_embedding_margin_pairs_ivf_bench,
+    )
+
+    gate = normalize(q_embedding_margin_pairs_ivf(spark, sf_dir).toPandas())
+    bench = normalize(q_embedding_margin_pairs_ivf_bench(spark, sf_dir).toPandas())
+    assert gate[0] > 0 and bench == gate
+
+
 def test_funnel_repeated_stage_needs_distinct_events(spark):
     # one purchase can NOT satisfy ["purchase", "purchase"]; two can —
     # each stage consumes a distinct event (position-tracked fold)

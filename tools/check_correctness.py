@@ -13,7 +13,13 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
+# Python workers don't inherit the driver's sys.path: point them at
+# the same tree, or pandas-UDF stages import another checkout's code
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (_REPO_ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

@@ -23,14 +23,12 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-# Python WORKERS don't inherit the driver's sys.path — without this,
-# pandas-UDF gates fail with ModuleNotFoundError when the tool is
-# launched from outside the repo root
-os.environ["PYTHONPATH"] = "/root/repo" + (
-    os.pathsep + os.environ["PYTHONPATH"]
-    if os.environ.get("PYTHONPATH")
-    else ""
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
+# Python workers don't inherit the driver's sys.path: point them at
+# the same tree, or pandas-UDF stages import another checkout's code
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (_REPO_ROOT, os.environ.get("PYTHONPATH")) if p
 )
 
 from check_correctness import normalize  # noqa: E402  (same dir)

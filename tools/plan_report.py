@@ -26,10 +26,17 @@ zero-Python claim is asserted per segment, not inherited.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
+# Python workers don't inherit the driver's sys.path: point them at
+# the same tree, or pandas-UDF stages import another checkout's code
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (_REPO_ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 DEFAULT_QUERIES = [
     "q1_pricing_summary",

@@ -19,13 +19,20 @@ shuffled per SummingMergeTree level vs input rows.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 import tempfile
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
+# Python workers don't inherit the driver's sys.path: point them at
+# the same tree, or pandas-UDF stages import another checkout's code
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (_REPO_ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 
 def _rest(base: str, path: str):

@@ -827,9 +827,9 @@ _IVF_ITERS = 2
 
 
 def q_ann_ivf_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # exact_mean=True: centroid means fold in sorted-id order, so the
-    # trained centroids — and therefore the inverted lists — are
-    # bit-identical to the oracle's serial computation
+    # the oracle replays training with sorted serial-fold means; the
+    # streaming avg differs from them only in float summation order
+    # (~1e-12 relative), which no centroid choice or rounded score sees
     e = _embs(spark, sf_dir)
     queries = e.filter(F.col("vec_id") < 10)
     return S.ivf_topk(
@@ -839,12 +839,11 @@ def q_ann_ivf_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=16,
         nprobe=2,
         train_iters=_IVF_ITERS,
-        exact_mean=True,
     )
 
 
 def _q_ann_ivf_top3_sql() -> str:
-    """Replicates kmeans_fit(max_iter=2, exact_mean=True) + ivf_topk:
+    """Replicates kmeans_fit(max_iter=2) + ivf_topk:
     each Lloyd's iteration is one CTE block (assign → per-dim sorted
     sequential-fold mean → re-collect ordered by dim)."""
 
@@ -931,13 +930,13 @@ FROM ranked WHERE rank <= 3
 def q_corpus_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced sampling (ops/similarity.kmeans_fit +
     ops/sampling.balanced_sample_by_group): cluster the embeddings
-    (Lloyd's, 8 centroids, oracle-pinned exact means), then keep each
+    (Lloyd's, 8 centroids), then keep each
     vector with probability n_min/n_cluster decided by an integer
     salted-hash test — the topic-rebalancing mix that equalizes
     expected cluster sizes before training. Reports per cluster
     (centroid_id, n_members, n_kept)."""
     e = _embs(spark, sf_dir)
-    cent = S.kmeans_fit(e, n_centroids=8, max_iter=_IVF_ITERS, exact_mean=True)
+    cent = S.kmeans_fit(e, n_centroids=8, max_iter=_IVF_ITERS)
     assigned = (
         e.select("vec_id", "embedding")
         .crossJoin(F.broadcast(cent))
@@ -961,7 +960,7 @@ def q_corpus_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_corpus_cluster_balanced_sql() -> str:
-    """kmeans_fit(8, 2 iters, exact_mean) replica (the ann_ivf CTE
+    """kmeans_fit(8, 2 iters) replica (the ann_ivf CTE
     pattern) + the integer bucket·n < n_min·2^20 keep test."""
 
     def cos(a_vec: str, b_vec: str) -> str:
@@ -1043,8 +1042,8 @@ def q_ann_pq_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-3 (the memory-compressed ANN scale
     path): per-subspace L2 codebooks, corpus as 4 small codes per
     vector, asymmetric-distance scoring from a broadcast query
-    distance table. exact_mean makes training bit-reproducible by the
-    oracle's serial folds."""
+    distance table. The oracle replays training with serial-fold
+    means."""
     e = _embs(spark, sf_dir)
     queries = e.filter(F.col("vec_id") < 5)
     return S.pq_topk(
@@ -1055,12 +1054,11 @@ def q_ann_pq_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=_PQ_K,
         dims=_PQ_M * _PQ_DSUB,
         train_iters=_PQ_ITERS,
-        exact_mean=True,
     )
 
 
 def _q_ann_pq_top3_sql() -> str:
-    """Replicates pq_train(exact_mean) + pq_encode + ADC scoring:
+    """Replicates pq_train + pq_encode + ADC scoring:
     subspaces are a generated dimension, each Lloyd's iteration one
     CTE block (L2 assign → per-dim sorted sequential-fold mean →
     re-collect), ranking on the ROUNDED score."""
@@ -1157,8 +1155,8 @@ _IVFPQ_K = 8
 
 def q_ann_ivfpq_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ (FAISS's production shape): L2 coarse lists + PQ
-    codebooks trained on residuals + probed-list ADC scoring.
-    exact_mean again pins training to the oracle's serial folds."""
+    codebooks trained on residuals + probed-list ADC scoring. The
+    oracle again replays training with serial-fold means."""
     e = _embs(spark, sf_dir)
     queries = e.filter(F.col("vec_id") < 5)
     return S.ivfpq_topk(
@@ -1171,38 +1169,11 @@ def q_ann_ivfpq_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=_IVFPQ_K,
         dims=_PQ_M * _PQ_DSUB,
         train_iters=_PQ_ITERS,
-        exact_mean=True,
     )
-
-
-def q_ann_ivfpq_top3_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only IVF-PQ variant on the SCALE path: default streaming
-    centroid means instead of ``exact_mean=True``. exact_mean exists
-    solely to pin training to the DuckDB oracle's serial fold order
-    (bit-reproducibility for the correctness gate) and costs ~2× in
-    extra sequential jobs; steady-state production training uses the
-    parallel streaming means timed here. Not registered in
-    ``queries()``/``oracle_sql()`` — the correctness gate stays on
-    ``ann_ivfpq_top3``."""
-    e = _embs(spark, sf_dir)
-    queries = e.filter(F.col("vec_id") < 5)
-    return S.ivfpq_topk(
-        e,
-        queries,
-        k=3,
-        n_coarse=_IVFPQ_COARSE,
-        nprobe=_IVFPQ_NPROBE,
-        m=_PQ_M,
-        n_centroids=_IVFPQ_K,
-        dims=_PQ_M * _PQ_DSUB,
-        train_iters=_PQ_ITERS,
-        exact_mean=False,
-    )
-
 
 
 def _q_ann_ivfpq_top3_sql() -> str:
-    """Replicates ivfpq_topk(exact_mean): coarse Lloyd's on full
+    """Replicates ivfpq_topk: coarse Lloyd's on full
     vectors, residuals vs the winning list centroid, the PQ chain on
     residual subvectors (carrying list_id), and ADC restricted to each
     query's nprobe probed lists with per-list query residuals."""
@@ -1563,30 +1534,13 @@ _SEM_K = 8
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-shaped semantic pruning (ops/similarity.py:
     semantic_dedup): k-means clusters, within-cluster cosine pairs,
-    drop the higher id of every pair over threshold. exact_mean pins
-    training to the oracle's serial folds; the 0.2 threshold suits the
-    near-orthogonal synthetic corpus."""
+    drop the higher id of every pair over threshold. The 0.2
+    threshold suits the near-orthogonal synthetic corpus."""
     return S.semantic_dedup(
         _embs(spark, sf_dir),
         n_clusters=_SEM_K,
         threshold=0.2,
         train_iters=_IVF_ITERS,
-        exact_mean=True,
-    )
-
-
-def q_semantic_dedup_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only semantic-dedup variant on the SCALE path: default
-    streaming centroid means instead of the oracle-reproducible
-    ``exact_mean=True`` serial folds (same rationale as
-    :func:`q_ann_ivfpq_top3_bench`). Not registered in
-    ``queries()``/``oracle_sql()``."""
-    return S.semantic_dedup(
-        _embs(spark, sf_dir),
-        n_clusters=_SEM_K,
-        threshold=0.2,
-        train_iters=_IVF_ITERS,
-        exact_mean=False,
     )
 
 
@@ -7130,15 +7084,13 @@ def q_embedding_margin_pairs_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin_pairs_ivf): EVERY vector mined against the whole corpus —
     the real bitext/alignment shape the exact margin gate's
     sample-queries contract forbids. Candidates come from the IVF
-    probed lists (16 centroids, nprobe=2, oracle-pinned exact-mean
-    training), the scoring join shuffles both sides on centroid_id
-    (no queries-sized broadcast), then the same top-2 margin pivot.
-    Recall vs exact margins is floor-frozen in
-    tests/test_ann_recall.py."""
+    probed lists (16 centroids, nprobe=2), the scoring join shuffles
+    both sides on centroid_id (no queries-sized broadcast), then the
+    same top-2 margin pivot. Recall vs exact margins is floor-frozen
+    in tests/test_ann_recall.py."""
     e = _embs(spark, sf_dir)
     return S.margin_pairs_ivf(
-        e, e, n_centroids=16, nprobe=2,
-        train_iters=_IVF_ITERS, exact_mean=True,
+        e, e, n_centroids=16, nprobe=2, train_iters=_IVF_ITERS
     )
 
 
@@ -7153,7 +7105,7 @@ def q_embedding_margin_pairs_ivf_bench(
     train-once-reuse posture — repeated mining against a fixed index
     never re-runs Lloyd's), so the timed number is the probed-list
     scoring + margin pivot, not the k-means driver loop. Same
-    mining parameters as the gate; exact_mean off (scale path)."""
+    mining parameters and training as the gate."""
     e = _embs(spark, sf_dir)
     # cache key includes the session via applicationId (session-stable,
     # never reused after GC the way id() can be): a DataFrame handle
@@ -7173,7 +7125,7 @@ def q_embedding_margin_pairs_ivf_bench(
 
 
 def _q_embedding_margin_pairs_ivf_sql() -> str:
-    """Replays kmeans_fit(exact_mean=True) + the nprobe=2 probed-list
+    """Replays kmeans_fit + the nprobe=2 probed-list
     scoring (the ann_ivf oracle machinery), then the margin pivot over
     rank <= 2 — corpus-vs-corpus, so q_assign has no vec_id filter."""
 

@@ -16,10 +16,10 @@
 - ``kmeans_fit`` + ``ivf_topk``: IVF ANN with distributed Lloyd's
   training — assignment is a broadcast cross join + ``max_by`` group
   aggregate (map-side combine, NO corpus-side window sort), centroid
-  update is posexplode → per-(centroid, dim) mean → re-collect.
-  ``exact_mean=True`` folds each mean in sorted-id order so training
-  is bit-reproducible by the DuckDB oracle (the default streaming
-  ``avg`` is the 100 TB path: constant memory per group).
+  update is posexplode → per-(centroid, dim) streaming ``avg`` →
+  re-collect (constant memory per group, the 100 TB path). The DuckDB
+  oracles replay training as sorted serial folds; the two sums differ
+  only in float summation order, below every gate's rounding.
 - ``pq_train`` / ``pq_encode`` / ``pq_topk``: product quantization
   (Jégou et al. 2011) — per-subspace L2 codebooks, the corpus stored
   as ``m`` small codes per vector (10-50× compression), asymmetric-
@@ -636,13 +636,27 @@ def embedding_dup_pairs(
 # ----------------------------------------------------------------- IVF ANN
 
 
+def _finite_vec(vec_col: str, op: str) -> Column:
+    """``vec_col`` as is, failing the job on a NULL vector or a NULL,
+    NaN or ±Inf component — training input no mean can absorb."""
+    v = F.col(vec_col)
+    bad = v.isNull() | F.exists(
+        v, lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == float("inf"))
+    )
+    return F.when(
+        bad,
+        F.raise_error(
+            F.lit(f"{op}: NULL, NaN or Inf in vector column {vec_col!r}")
+        ),
+    ).otherwise(v)
+
+
 def kmeans_fit(
     corpus: DataFrame,
     n_centroids: int = 16,
     max_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact_mean: bool = False,
     metric: str = "cosine",
 ) -> DataFrame:
     """Distributed Lloyd's k-means in pure DataFrame aggregations:
@@ -658,20 +672,16 @@ def kmeans_fit(
       group-by (the cross-joined rows of one vector are colocated, so
       map-side combine collapses them before any shuffle); no window
       sort over the corpus.
-    - update: posexplode to (centroid, dim) cells → mean → re-collect
-      ordered by dim. ``exact_mean=True`` sums each mean as a sorted-
-      by-id sequential fold, making training bit-identical to a serial
-      (or DuckDB-oracle) run; the default streaming ``avg`` is the
-      constant-memory scale path.
+    - update: posexplode to (centroid, dim) cells → streaming ``avg``
+      (partial-agg, constant memory per cell) → re-collect ordered by
+      dim. It differs from a sorted serial fold — what the DuckDB
+      oracles replay — only in float summation order (~1e-12
+      relative).
 
-    .. warning:: ``exact_mean=True`` collects the FULL member list of
-       each (centroid, dim) cell into one array before folding — per-
-       task memory grows with the largest cluster × dims. It exists
-       for oracle parity at test scale; at corpus scale always use the
-       default, whose partial-agg ``avg`` is constant-memory (the two
-       differ only by float summation order, ~1e-12 relative).
-
-    Centroids that lose every member drop out (standard Lloyd's).
+    Centroids that lose every member drop out (standard Lloyd's). A
+    NULL vector, or a NULL / NaN / ±Inf component, fails the job
+    with a message naming ``vec_col``: one such value would otherwise
+    turn its centroid's mean into NaN, or drop silently out of it.
     """
     if metric not in ("cosine", "l2"):
         raise ValueError(f"metric must be cosine|l2, got {metric!r}")
@@ -684,7 +694,10 @@ def kmeans_fit(
     )
     for _ in range(max_iter):
         assigned = (
-            corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"))
+            corpus.select(
+                F.col(id_col).alias("__id"),
+                _finite_vec(vec_col, "kmeans_fit").alias("__vec"),
+            )
             # corpus-side norm once per row, not once per (row, centroid)
             # pair — sqrt(a)*sqrt(b) matches the inline cosine exactly
             .withColumn("__vn", _norm(F.col("__vec")))
@@ -708,36 +721,11 @@ def kmeans_fit(
             )
         )
         comp = assigned.select(
-            "centroid_id", "__id", F.posexplode("__vec").alias("pos", "v")
+            "centroid_id", F.posexplode("__vec").alias("pos", "v")
         )
-        if exact_mean:
-            pv = (
-                comp.groupBy("centroid_id", "pos")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("__id").alias("i"),
-                                F.col("v").cast("double").alias("x"),
-                            )
-                        )
-                    ).alias("xs")
-                )
-                .select(
-                    "centroid_id",
-                    "pos",
-                    (
-                        F.aggregate(
-                            "xs", F.lit(0.0), lambda acc, s: acc + s["x"]
-                        )
-                        / F.size("xs")
-                    ).alias("m"),
-                )
-            )
-        else:
-            pv = comp.groupBy("centroid_id", "pos").agg(
-                F.avg(F.col("v").cast("double")).alias("m")
-            )
+        pv = comp.groupBy("centroid_id", "pos").agg(
+            F.avg(F.col("v").cast("double")).alias("m")
+        )
         # centroids are k×d doubles — dim-lookup-sized metadata by
         # definition, like the SQ8 codebook — so materialize them on
         # the driver: one collect replaces a third shuffle (the
@@ -769,7 +757,6 @@ def ivf_topk(
     round_digits: int = 4,
     centroids: DataFrame | None = None,
     train_iters: int = 2,
-    exact_mean: bool = False,
     broadcast_queries: bool = True,
     scorer: str = "auto",
     gemm_block_rows: int | None = None,
@@ -815,9 +802,7 @@ def ivf_topk(
     cent = (
         centroids
         if centroids is not None
-        else kmeans_fit(
-            corpus, n_centroids, train_iters, id_col, vec_col, exact_mean
-        )
+        else kmeans_fit(corpus, n_centroids, train_iters, id_col, vec_col)
     )
     cent = F.broadcast(cent)
 
@@ -934,7 +919,6 @@ def pq_train(
     max_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact_mean: bool = False,
 ) -> DataFrame:
     """Product-quantization codebooks: (subspace, centroid_id, c_vec).
     Each of the ``m`` subspaces gets its own L2 k-means codebook, so a
@@ -946,13 +930,15 @@ def pq_train(
     All ``m`` codebooks train in ONE grouped Lloyd's job per
     iteration: the subspace id is just another grouping key on the
     subvector rows, so assignment is a single broadcast join +
-    ``min_by`` aggregate and the update a single posexplode-mean —
-    NOT a per-subspace loop of ``m`` sequential k-means jobs (the
-    loop costs m× the corpus scans at scale and m× the job-overhead
-    latency; measured ~2× the whole IVF-PQ query at sf0.1).
+    ``min_by`` aggregate and the update a single posexplode-``avg``
+    (as in :func:`kmeans_fit`) — NOT a per-subspace loop of ``m``
+    sequential k-means jobs (the loop costs m× the corpus scans at
+    scale and m× the job-overhead latency; measured ~2× the whole
+    IVF-PQ query at sf0.1).
     Semantics are identical to independent per-subspace runs: lowest-
     ``n_centroids`` ids seed each subspace, ties break on centroid
-    id, emptied centroids drop out per subspace.
+    id, emptied centroids drop out per subspace. Non-finite training
+    vectors fail the job as in :func:`kmeans_fit`.
 
     ``dims`` must be divisible by ``m``; probed from the first row if
     omitted (one tiny job, training dominates)."""
@@ -960,7 +946,10 @@ def pq_train(
         dims = len(corpus.select(vec_col).first()[0])
     if dims % m:
         raise ValueError(f"dims={dims} not divisible by m={m}")
-    sv = _subvectors(corpus, m, dims, id_col, vec_col, id_col)
+    sv = _subvectors(
+        corpus.select(id_col, _finite_vec(vec_col, "pq_train").alias(vec_col)),
+        m, dims, id_col, vec_col, id_col,
+    )
     w = Window.partitionBy("subspace").orderBy(id_col)
     cent = (
         sv.withColumn("__rn", F.row_number().over(w))
@@ -984,36 +973,11 @@ def pq_train(
             )
         )
         comp = assigned.select(
-            "subspace", "centroid_id", id_col,
-            F.posexplode("sub").alias("pos", "v"),
+            "subspace", "centroid_id", F.posexplode("sub").alias("pos", "v")
         )
-        if exact_mean:
-            pv = (
-                comp.groupBy("subspace", "centroid_id", "pos")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col(id_col).alias("i"),
-                                F.col("v").cast("double").alias("x"),
-                            )
-                        )
-                    ).alias("xs")
-                )
-                .select(
-                    "subspace",
-                    "centroid_id",
-                    "pos",
-                    (
-                        F.aggregate("xs", F.lit(0.0), lambda acc, s: acc + s["x"])
-                        / F.size("xs")
-                    ).alias("m"),
-                )
-            )
-        else:
-            pv = comp.groupBy("subspace", "centroid_id", "pos").agg(
-                F.avg(F.col("v").cast("double")).alias("m")
-            )
+        pv = comp.groupBy("subspace", "centroid_id", "pos").agg(
+            F.avg(F.col("v").cast("double")).alias("m")
+        )
         cent = (
             pv.groupBy("subspace", "centroid_id")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
@@ -1080,7 +1044,6 @@ def pq_topk(
     vec_col: str = "embedding",
     codebooks: DataFrame | None = None,
     train_iters: int = 2,
-    exact_mean: bool = False,
     round_digits: int = 4,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes:
@@ -1110,7 +1073,6 @@ def pq_topk(
         codebooks = pq_train(
             corpus, m, n_centroids, dims,
             max_iter=train_iters, id_col=id_col, vec_col=vec_col,
-            exact_mean=exact_mean,
         )
     codes = pq_encode(corpus, codebooks, m, dims, id_col, vec_col)
     q_sv = _subvectors(queries, m, dims, id_col, vec_col, "query_id")
@@ -1191,7 +1153,6 @@ def ivfpq_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_iters: int = 2,
-    exact_mean: bool = False,
     materialize: bool = False,
 ) -> dict:
     """Build the IVF-PQ index artifacts once: coarse centroids, the
@@ -1210,7 +1171,6 @@ def ivfpq_build(
         max_iter=train_iters,
         id_col=id_col,
         vec_col=vec_col,
-        exact_mean=exact_mean,
         metric="l2",
     ).select(F.col("centroid_id").alias("list_id"), F.col("c_vec").alias("l_vec"))
     residual = F.zip_with(
@@ -1229,7 +1189,6 @@ def ivfpq_build(
     books = pq_train(
         c_res, m, n_centroids, dims,
         max_iter=train_iters, id_col=id_col, vec_col=vec_col,
-        exact_mean=exact_mean,
     )
     codes = pq_encode(c_res, books, m, dims, id_col, vec_col)
     inv = codes.join(c_res.select(id_col, "list_id"), on=id_col).select(
@@ -1355,7 +1314,6 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_iters: int = 2,
-    exact_mean: bool = False,
     round_digits: int = 4,
 ) -> DataFrame:
     """IVF-PQ: the production billion-vector composition (FAISS's
@@ -1386,7 +1344,6 @@ def ivfpq_topk(
         id_col=id_col,
         vec_col=vec_col,
         train_iters=train_iters,
-        exact_mean=exact_mean,
     )
     return ivfpq_search(index, queries, k=k, nprobe=nprobe, round_digits=round_digits)
 
@@ -1508,7 +1465,6 @@ def semantic_cluster_stats(
     corpus: DataFrame,
     n_clusters: int = 8,
     train_iters: int = 2,
-    exact_mean: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster_size: int | None = None,
@@ -1525,7 +1481,6 @@ def semantic_cluster_stats(
         max_iter=train_iters,
         id_col=id_col,
         vec_col=vec_col,
-        exact_mean=exact_mean,
     )
     sizes = (
         corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
@@ -1630,7 +1585,6 @@ def semantic_dedup(
     n_clusters: int = 8,
     threshold: float = 0.9,
     train_iters: int = 2,
-    exact_mean: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 4,
@@ -1679,7 +1633,6 @@ def semantic_dedup(
         max_iter=train_iters,
         id_col=id_col,
         vec_col=vec_col,
-        exact_mean=exact_mean,
     )
     assigned = (
         corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
@@ -2292,7 +2245,6 @@ def margin_pairs_ivf(
     round_digits: int = 4,
     centroids: DataFrame | None = None,
     train_iters: int = 2,
-    exact_mean: bool = False,
     scorer: str = "auto",
     gemm_block_rows: int | None = None,
 ) -> DataFrame:
@@ -2333,7 +2285,6 @@ def margin_pairs_ivf(
         round_digits=round_digits,
         centroids=centroids,
         train_iters=train_iters,
-        exact_mean=exact_mean,
         broadcast_queries=False,
         scorer=scorer,
         gemm_block_rows=gemm_block_rows,
